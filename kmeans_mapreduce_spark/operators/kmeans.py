@@ -5,8 +5,10 @@ worker.go).  The Spark-first re-expression:
 
   reference (Go MapReduce over RPC)             here (DataFrame plans)
   -------------------------------------------   -------------------------------
-  getChunks partitioner (master.go:511-547)     df.repartition / parquet splits
-  worker chunk cache (worker.go:54-60)          df.cache() before the loop
+  getChunks partitioner (master.go:511-547)     _features_blocks: one block
+                                                layout from exact row counts
+  worker chunk cache (worker.go:54-60)          packed feature blocks,
+                                                persisted once
   Map: classify (worker.go:288-304)             argmin over a centroid literal
                                                 array — broadcast-by-literal,
                                                 whole-stage codegen, no join
@@ -232,196 +234,114 @@ class KMeansResult:
         )
 
 
-#: target bytes of float64 features per numpy block.  Scale-adaptive
-#: sizing (guide §2): a 2k-row bench corpus collapses to ONE block (one
-#: task per Lloyd pass — scheduling overhead, not data, dominates tiny
-#: inputs), while any real-scale input keeps its native scan
-#: parallelism because its packed size exceeds parts * target.
+#: target bytes of float64 features per numpy block.  A small input
+#: lays out as ONE block (one task per fit: scheduling overhead, not
+#: data, dominates tiny inputs); a large one as about one block per
+#: ``_BLOCK_TARGET_BYTES``.
 _BLOCK_TARGET_BYTES = 64 << 20
 
 
 def _features_blocks(points: DataFrame, dim: int, features_col: str = "features"):
-    """Materialize the points' feature vectors ONCE as an RDD of numpy
-    blocks (one (n_i x dim) float64 matrix per partition), cached.
+    """Lay the points' feature vectors out as numpy blocks, one
+    (n_i x dim) float64 matrix per partition, and return
+    ``(blocks, cache)``: the caller unpersists ``cache`` after the fit.
 
-    This is the Lloyd loop's chunk cache in its cheapest consumable
-    form: the Arrow pack stage moves each partition across the Python
-    boundary exactly once as columnar batches (never row-by-row
-    pickling) and re-slices the list column's contiguous value buffer
-    into one matrix per batch (guide §4.2 — offsets math, no per-row
-    copies), and every later iteration deserializes one ndarray per
-    partition instead of re-evaluating a SQL plan.  The partition count
-    is derived from the EXACT packed byte count (coalesce toward
-    ~``_BLOCK_TARGET_BYTES`` per block, never above the input's native
-    partition count), so per-pass task count tracks data volume instead
-    of a constant tuned for either local mode or the cluster.  Partition
-    layout — and therefore per-partition summation order — is frozen at
-    build time, so iterations see identical foldings every pass.
+    The features are packed ONCE, at the input's native parallelism:
+    an Arrow stage turns each batch's list column into one contiguous
+    float64 buffer (no per-row pickling), persisted MEMORY_AND_DISK as
+    plain ``(bytes, n)`` tuples (no Row rebuilt on each read of the
+    cache).  The job that materializes the pack
+    also returns each partition's exact row count, and the layout is
+    decided once, from those counts.  With ``want`` blocks of about
+    ``_BLOCK_TARGET_BYTES``, the input is skewed iff ``want > 1`` and
+    its largest partition holds at least twice the fair share of
+    ``min(want, slots)`` tasks: a one-partition input above one block,
+    or a file whose single row group lands every row in one split.
 
-    The block-count merge happens on the PACKED RDD, not the input
-    DataFrame (r15 opt): coalescing `sel` before ``mapInArrow`` would
-    run the projection + Arrow pack of the whole input inside the
-    merged (often single) task — measured 3.2s serialized vs ~0.4s
-    parallel on the 600k-row lineitem fit.  RDD ``coalesce`` uses the
-    same consecutive-partition grouping as the DataFrame operator and
-    ``_consolidate`` vstacks in partition/batch order, so the resulting
-    block matrices — and therefore every fold — are bit-identical to
-    the coalesce-first layout; only where the pack WORK runs changes.
-    One further saving: the packed RDD handle is created once and
-    reused for the partition count (a DataFrame->RDD conversion costs
-    ~0.5s of plan/serializer setup per call).
+    * Skewed: the packed rows are re-cut into ``want`` contiguous global
+      row ranges (one shuffle of the packed bytes; each block is sorted
+      by global row offset, so its contents do not depend on fetch
+      order), the blocks are persisted and the pack is released.
+      Without this every Lloyd pass would run on one core.
+    * Otherwise the blocks are an unpersisted view of the pack,
+      narrow-coalesced to ``min(partitions, want)``: no second persist
+      and no second job, and the feature matrix is cached once.  The
+      coalesce reads the cached pack; placed before the pack it would
+      run the scan and the pack inside the merged tasks.
 
-    r16: the packed cache holds plain (bytes, n) tuples (no Row
-    unpickling on read); block sizing reads the exact packed byte count
-    off the pack itself (optimizer estimates under-read unpacked
-    float64 features by ~14x on compressed scans); and a SINGLE-
-    partition input whose estimate exceeds one block is repartitioned
-    up before the pack instead of packing — and iterating — serially.
-    None of this moves any multi-partition input's layout decision off
-    its actual data volume.
+    Either way the layout is frozen when this returns, so every pass
+    folds the same rows in the same order.  The rule never fires at or
+    below one block, nor on partitions within 2x of each other.
     """
     import numpy as np
     import pyarrow as pa
-
-    sel = points.select(features_col)
-    try:
-        est = int(str(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        est = None
-    if est is not None and est >= (1 << 60):
-        # "unknown" sentinel, not a measurement: plans without real
-        # stats (RDD-backed createDataFrame inputs among them) report
-        # spark.sql.defaultSizeInBytes = Long.MaxValue.  The old code
-        # was immune (it only ever capped DOWN to parts_in); the
-        # repartition escape hatch below must not treat 8 EB as data.
-        est = None
+    from pyspark import StorageLevel
 
     def _pack(batches):
         for batch in batches:
             col = batch.column(0)
             flat = col.flatten().to_numpy(zero_copy_only=False)
             arr = np.ascontiguousarray(flat, dtype=np.float64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([arr.tobytes()], type=pa.binary()),
-                    pa.array([len(col)], type=pa.int64()),
-                ],
-                names=["b", "n"],
-            )
-
-    packed = sel.mapInArrow(_pack, schema="b binary, n long")
+            yield pa.RecordBatch.from_pydict({"b": [arr.tobytes()], "n": [len(col)]})
 
     def _consolidate(rows):
-        mats = [
-            np.frombuffer(b, dtype=np.float64).reshape(int(n), dim)
-            for b, n in rows
-        ]
+        mats = [np.frombuffer(b, dtype=np.float64).reshape(int(n), dim) for b, n in rows]
         mats = [m for m in mats if m.size]
         if mats:
             # vstack keeps row order: same fold as iterating the batches
             yield mats[0] if len(mats) == 1 else np.vstack(mats)
 
-    from pyspark import StorageLevel
-
-    # MEMORY_AND_DISK everywhere (r15 review fix): the DataFrame cache
-    # this engine replaced spilled to disk under memory pressure; the
-    # PySpark RDD persist() default is MEMORY_ONLY, which would silently
-    # re-run scan+projection+pack on every Lloyd pass once blocks evict
-    # — the exact failure mode guide §5 warns about at scale.
-    _LEVEL = StorageLevel.MEMORY_AND_DISK
-    # Persist plain (bytes, count) tuples, not pickled Rows (r16 opt,
-    # guide §4.2): every read of the packed cache — the fused
-    # single-block loop once per fit, the two-phase merge once per
-    # build — re-ran the Row unpickler over the block bytes; the bare
-    # tuple unpickles with no row reconstruction.  Same bytes, same
-    # order, bit-identical blocks; measured in-task on the 600k-row
-    # lineitem pack: iterate-the-cache 0.16s -> 0.05s per read.
-    prdd = packed.rdd.map(lambda r: (r[0], r[1]))
-    parts_in = prdd.getNumPartitions()
-    if parts_in == 1 and est is not None and est > _BLOCK_TARGET_BYTES:
-        # Escape hatch (r15 review finding #5, deferred to this round;
-        # trigger narrowed to parts_in == 1 by this round's review): a
-        # SINGLE-partition input is unambiguously pathological once its
-        # size estimate exceeds one block — the pack, and then every
-        # Lloyd pass, would run on one core no matter the data volume.
-        # Guide §2.5 "input skew": repartition immediately after the
-        # read (round-robin repartition is deterministic — sort-before-
-        # repartition, SPARK-23207).  Multi-partition inputs are NEVER
-        # touched, whatever the estimate says: a desired-vs-parts
-        # comparison mixes a projected-column estimate with byte-range
-        # split counts and would fire on ordinary large inputs (and an
-        # under-estimate would still miss a multi-split file whose one
-        # giant row group lands every row in one task — a runtime-skew
-        # shape no plan-time heuristic can see; documented limitation).
-        # Width is bounded by the slot count: the hatch restores
-        # parallelism, it does not chase exact block sizing (the exact
-        # post-pack sizing below handles that).
-        width = min(
-            -(-est // _BLOCK_TARGET_BYTES),
-            points.sparkSession.sparkContext.defaultParallelism * 4,
-        )
-        sel = sel.repartition(width)
-        packed = sel.mapInArrow(_pack, schema="b binary, n long")
-        prdd = packed.rdd.map(lambda r: (r[0], r[1]))
-        parts_in = width
-    if parts_in == 1:
-        # one partition IS one block (splitting would need the very
-        # shuffle the hatch above declined); lazy persist keeps the
-        # caller's fused single-block loop at ONE job for the whole
-        # pack + consolidate + fit.
-        return prdd.mapPartitions(_consolidate).persist(_LEVEL)
-    # Two-phase merge: materialize the pack at native parallelism
-    # FIRST, then narrow-coalesce the cached packed bytes.  A bare
-    # coalesce (RDD or DataFrame — both are narrow) would pipeline
-    # the whole scan+projection+pack into the merged task and
-    # serialize it (measured 4-5s vs ~1s on the 600k-row lineitem
-    # fit).  The transient packed cache holds exactly the block
-    # bytes and is dropped as soon as the block cache exists —
-    # including on a failed materialization (r15 review fix: a
-    # pack-job error used to leak the transient persist).
-    #
-    # The block count comes from the EXACT packed byte count (total
-    # rows x dim x 8, read off the pack's own n column by the same job
-    # that materializes the persist — no extra pass), NOT the
-    # optimizer's estimate: a parquet scan's sizeInBytes reflects
-    # compressed file bytes scaled by projection width, which
-    # under-reads the unpacked float64 features by ~14x on the
-    # lineitem shape — measured at 8x bench scale, the estimate-based
-    # sizing collapsed a 153 MB feature matrix into ONE block and ran
-    # the whole Lloyd loop serially (74.8 s vs ~7 s at 1x).
-    prdd = prdd.persist(_LEVEL)
+    # MEMORY_AND_DISK, not PySpark's MEMORY_ONLY default: evicted blocks
+    # would otherwise re-run the scan and pack on every Lloyd pass
+    level = StorageLevel.MEMORY_AND_DISK
+    pack = (
+        points.select(features_col)
+        .mapInArrow(_pack, schema="b binary, n long")
+        .rdd.map(lambda r: (r[0], r[1]))
+        .persist(level)
+    )
     blocks = None
     try:
-        total_n = prdd.mapPartitions(
-            lambda rows: (int(n) for _, n in rows)
-        ).sum()
-        target = max(1, min(parts_in, -(-(total_n * dim * 8) // _BLOCK_TARGET_BYTES)))
-        if target == 1:
-            # Single-block fast path: the Lloyd loop runs exactly
-            # ONE job over this view (`_fit_single_block`), so
-            # consolidation happens once either way — skip the
-            # second persist + job + block unpickle and let that one
-            # job read the cached packed bytes directly.  The packed
-            # cache IS the block cache here; `_graft_backing` hands
-            # its lifetime to the caller (fit_kmeans_native
-            # unpersists it in its finally).
-            blocks = prdd.coalesce(1).mapPartitions(_consolidate)
-            blocks._graft_backing = prdd
-            return blocks
-        if target == parts_in:
-            blocks = prdd.mapPartitions(_consolidate).persist(_LEVEL)
-        else:
-            blocks = (
-                prdd.coalesce(target).mapPartitions(_consolidate).persist(_LEVEL)
-            )
-        blocks.count()  # materialize before releasing the packed cache
+        ns = pack.mapPartitions(lambda rows: [sum(int(n) for _, n in rows)]).collect()
+        total = sum(ns)
+        want = max(1, -(-(total * dim * 8) // _BLOCK_TARGET_BYTES))
+        fair = total / min(want, pack.context.defaultParallelism)
+        if want == 1 or max(ns) < 2 * fair:
+            view = pack.coalesce(want) if want < len(ns) else pack
+            return view.mapPartitions(_consolidate), pack
+
+        def _cut(i, rows):
+            # block j holds the global rows [j*total//want, (j+1)*total//want);
+            # each piece is keyed by its block and carries its global offset
+            g = sum(ns[:i])
+            for b, n in rows:
+                X = np.frombuffer(b, dtype=np.float64).reshape(int(n), dim)
+                lo = 0
+                while lo < len(X):
+                    j = ((g + lo + 1) * want - 1) // total
+                    hi = min(len(X), (j + 1) * total // want - g)
+                    yield j, (g + lo, X[lo:hi].tobytes(), hi - lo)
+                    lo = hi
+                g += len(X)
+
+        def _regroup(items):
+            pieces = sorted((v for _, v in items), key=lambda v: v[0])
+            return _consolidate((b, n) for _, b, n in pieces)
+
+        blocks = (
+            pack.mapPartitionsWithIndex(_cut)
+            .partitionBy(want, lambda j: j)
+            .mapPartitions(_regroup)
+            .persist(level)
+        )
+        blocks.count()  # materialize before releasing the pack
     except BaseException:
         if blocks is not None:
             blocks.unpersist()
-        prdd.unpersist()
+        pack.unpersist()
         raise
-    prdd.unpersist()
-    return blocks
+    pack.unpersist()
+    return blocks, blocks
 
 
 #: rows per distance-scratch chunk in `_block_stats`: 64k rows x k=4
@@ -675,18 +595,17 @@ def fit_kmeans_native(
     and coordinate sums the catalog reports need, without a separate
     DataFrame aggregation over the corpus.
 
-    Engine (optimization round 15): the iteration body runs as ONE RDD
-    job per iteration over numpy blocks materialized once from the
-    input (`_features_blocks`) — the distribution/shuffle/broadcast
-    economics of the old DataFrame loop (k x d broadcast down,
-    k x (d+1) partials up, bytes independent of N) with the per-
-    iteration driver cost removed: no plan re-analysis, no broadcast
-    exchange build, no AQE re-planning per iteration, and the per-row
-    distance math runs vectorized in numpy instead of interpreted
-    higher-order expressions (guide §4.2).  Measured on the sf0.1
-    bench: 14.5s -> ~3s (embeddings, 11 iterations), 9.9s -> ~3s
-    (lineitem, 10 iterations).  `_fit_kmeans_native_df` keeps the old
-    DataFrame loop; tests pin both engines to the same trajectory.
+    Engine: the features are laid out once as numpy blocks
+    (`_features_blocks`: one layout decision, after the pack, from exact
+    per-partition row counts), and each iteration is one RDD job over
+    them: k x d centroids down, k x (d+1) partials per block up, bytes
+    independent of N, and the per-row distance math vectorized in numpy.
+    A single block runs the whole loop inside one task: one job for all
+    iterations.  Both shapes share `_block_stats` and `_lloyd_iterate`,
+    so they follow the same trajectory; `_fit_kmeans_native_df` keeps
+    the DataFrame loop the tests pin this engine to.  The cache
+    `_features_blocks` hands back is released in this function's
+    ``finally``, on success and on error.
 
     Pass ``cache_input=False`` when the caller already manages a cache
     that covers ``points`` (the numpy block cache is built either way;
@@ -700,9 +619,9 @@ def fit_kmeans_native(
     df_cached = cache_input and initial_centroids is None
     if df_cached:
         points = points.cache()
-    blocks = None  # r15 review fix: a pack failure must still release the df cache
+    cache = None  # a failed pack still releases the df cache below
     try:
-        blocks = _features_blocks(points, dim)
+        blocks, cache = _features_blocks(points, dim)
         centroids = (
             [list(c) for c in initial_centroids]
             if initial_centroids is not None
@@ -746,11 +665,8 @@ def fit_kmeans_native(
             res.final_sums = [[float(v) for v in row] for row in fsums]
         return res
     finally:
-        if blocks is not None:
-            backing = getattr(blocks, "_graft_backing", None)
-            blocks.unpersist()
-            if backing is not None:  # single-block fused path's packed cache
-                backing.unpersist()
+        if cache is not None:
+            cache.unpersist()
         if df_cached:
             points.unpersist()
 

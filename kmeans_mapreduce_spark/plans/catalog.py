@@ -562,8 +562,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 #     mllib_fit_invariants, pq_train_invariants) in the same window.
 #     This is also the numpy-block Lloyd engine's FIRST driver-recorded
 #     oracle verification (VERDICT r15 "Next round" #1) and now covers
-#     the r16 engine changes (tuple-encoded packed persist, pack
-#     repartition escape hatch) and the r16 invariants-query overlap;
+#     the r16 engine changes (tuple-encoded packed persist; the block
+#     layout is since decided once, after the pack, from exact row
+#     counts) and the r16 invariants-query overlap;
 # (e) oldest-driver-green fill: the 4 remaining round-9-vintage rows
 #     in catalog order (drains the round-9 bucket), then the first 38
 #     round-10-vintage rows in catalog order (mm_frame_sample, the

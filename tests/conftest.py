@@ -9,6 +9,8 @@ sys.path.insert(0, str(REPO))
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 
+_SLOW_SKIPPED = pytest.StashKey[int]()
+
 
 def pytest_collection_modifyitems(config, items):
     """Keep the DEFAULT run inside the driver's verify budget (r15
@@ -26,9 +28,19 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="multi-minute stress/sweep test; set SPARK_GRAFT_RUN_SLOW=1"
     )
-    for item in items:
-        if "slow" in item.keywords or "scale" in item.keywords:
-            item.add_marker(skip)
+    slow = [item for item in items if "slow" in item.keywords or "scale" in item.keywords]
+    for item in slow:
+        item.add_marker(skip)
+    config.stash[_SLOW_SKIPPED] = len(slow)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Make the reduced default coverage visible at the end of the run."""
+    n = config.stash.get(_SLOW_SKIPPED, None)
+    if n is not None:
+        terminalreporter.write_line(
+            f"SPARK_GRAFT_RUN_SLOW unset: {n} slow/scale tests skipped", yellow=True
+        )
 
 
 @pytest.fixture(scope="session")

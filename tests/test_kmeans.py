@@ -230,9 +230,8 @@ def test_block_stats_matches_unbuffered_reference():
 
 def test_multi_block_engine_matches_single_block(points, monkeypatch):
     """r15 review gate: the MULTI-block distributed path (_lloyd_pass —
-    two-phase coalesce merge, per-partition partials, driver-ordered
-    fold) was previously never executed by tests (every fixture sizes
-    to one block).  Force it by shrinking the block target so the
+    per-partition partials, driver-ordered fold) was previously never
+    executed by tests (every fixture sizes to one block).  Force it by shrinking the block target so the
     fixture splits into several blocks, and pin its trajectory against
     the single-block fused path AND the DataFrame loop.
 
@@ -259,47 +258,122 @@ def test_multi_block_engine_matches_single_block(points, monkeypatch):
         assert math.isclose(wa, wb, rel_tol=1e-9)
 
 
-def test_pack_escape_hatch_single_partition_input(points, monkeypatch):
-    """r16 gate (r15 review finding #5): an input whose size estimate
-    calls for MORE blocks than it has partitions — the one-giant-row-
-    group shape — must be repartitioned up BEFORE the Arrow pack
-    instead of packing and looping serially.  Coalescing `points` to
-    one partition with a shrunken block target forces the hatch; the
-    blocks must come out multi-partition and the trajectory must still
-    match the DataFrame loop bitwise (float32-origin fixture: per-
-    cluster float64 sums are exact under any fold, so the layout
-    change cannot move the result — which is also why the hatch is
-    safe to leave untriggered on sanely-split inputs)."""
+def _block_rows(blocks):
+    """Row count of every block, in partition order."""
+    return blocks.mapPartitions(lambda it: [sum(X.shape[0] for X in it)]).collect()
+
+
+@pytest.fixture
+def small_splits(spark):
+    """Split files into 32 KiB input partitions for one test."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(32 * 1024))
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("shape", ["coalesced", "one_row_group"])
+def test_skewed_input_is_recut_into_even_blocks(
+    points, tmp_path, monkeypatch, small_splits, shape
+):
+    """An input whose rows all sit in one partition, above one block, is
+    re-cut after the pack into contiguous blocks of equal row count:
+    ``points.coalesce(1)``, and a one-row-group file that Spark reads
+    as several splits of which one holds every row.  The blocks must
+    hold the input rows in order, and the fit over them must match the
+    DataFrame loop bitwise (float32-origin fixture: per-cluster float64
+    sums are exact under any grouping)."""
+    import numpy as np
+
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
     from kmeans_mapreduce_spark.operators.kmeans import (
         _features_blocks,
         _fit_kmeans_native_df,
     )
 
-    one_part = points.coalesce(1)
-    init = [list(r["features"]) for r in points.orderBy("id").limit(3).collect()]
+    if shape == "coalesced":
+        df = points.coalesce(1)
+    else:
+        path = str(tmp_path / "one_row_group")
+        points.coalesce(1).write.parquet(path)  # one task: one row group
+        df = points.sparkSession.read.parquet(path)
+        ns = df.rdd.glom().map(len).collect()
+        assert len(ns) > 1 and sorted(ns)[-2] == 0, ns
+    df = df.select("id", "features")
     monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
-    blocks = _features_blocks(one_part.select("id", "features"), DIM)
+    blocks, cache = _features_blocks(df, DIM)
     try:
-        n_blocks = blocks.getNumPartitions()
+        rows = _block_rows(blocks)
+        stacked = np.vstack(blocks.collect())
     finally:
-        blocks.unpersist()
-        backing = getattr(blocks, "_graft_backing", None)
-        if backing is not None:
-            backing.unpersist()
-    assert n_blocks > 1, "hatch did not raise pack parallelism"
-    hatched = fit_kmeans_native(
-        one_part, k=3, dim=DIM, initial_centroids=init, track_wssse=True
-    )
+        cache.unpersist()
+    assert len(rows) > 1 and max(rows) - min(rows) <= 1, rows
+    expected = np.array([r["features"] for r in df.select("features").collect()])
+    assert stacked.tobytes() == expected.tobytes()
+
+    init = [list(r["features"]) for r in points.orderBy("id").limit(3).collect()]
+    fit = fit_kmeans_native(df, k=3, dim=DIM, initial_centroids=init, track_wssse=True)
     ref = _fit_kmeans_native_df(
         points, k=3, dim=DIM, initial_centroids=init, track_wssse=True
     )
-    assert hatched.iterations == ref.iterations
-    assert hatched.converged == ref.converged
-    assert hatched.delta == ref.delta
-    assert hatched.centroids == ref.centroids
-    for wa, wb in zip(hatched.wssse_history, ref.wssse_history):
+    assert fit.iterations == ref.iterations
+    assert fit.converged == ref.converged
+    assert fit.delta == ref.delta
+    assert fit.centroids == ref.centroids
+    for wa, wb in zip(fit.wssse_history, ref.wssse_history):
         assert math.isclose(wa, wb, rel_tol=1e-9)
+
+
+@pytest.mark.parametrize("shape", ["evenly_split", "one_block"])
+def test_unskewed_layout_is_the_coalesced_pack(points, monkeypatch, request, shape):
+    """No-change pin: an evenly split input, and one at or below one
+    block, keep the layout of a narrow coalesce of the cached pack to
+    min(partitions, want) blocks, and `_features_blocks` runs exactly
+    one Spark job for them (the pack and its row counts)."""
+    from pyspark import StorageLevel
+
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+    from kmeans_mapreduce_spark.operators.kmeans import _features_blocks
+
+    if shape == "evenly_split":
+        # round-robin: 8 partitions within one row of each other, cached
+        # so that packing them needs no shuffle job; the 500 x 64 x
+        # 8-byte fixture then wants 3 blocks
+        df = points.repartition(8).cache()
+        request.addfinalizer(df.unpersist)
+        df.count()
+        monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 100_000)
+    else:
+        df = points
+    df = df.select("id", "features")
+    total = points.count()
+    want = max(1, -(-(total * DIM * 8) // K_mod._BLOCK_TARGET_BYTES))
+    assert want == (3 if shape == "evenly_split" else 1)
+
+    # the reference layout: row counts of a cached copy of the input's
+    # partitions, narrow-coalesced the same way
+    counts = df.rdd.mapPartitions(lambda it: [sum(1 for _ in it)])
+    counts = counts.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        counts.count()
+        parts = counts.getNumPartitions()
+        view = counts.coalesce(want) if want < parts else counts
+        expected = view.glom().map(sum).collect()
+    finally:
+        counts.unpersist()
+
+    sc = points.sparkSession.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    blocks, cache = _features_blocks(df, DIM)
+    jobs = set(sc.statusTracker().getJobIdsForGroup()) - before
+    try:
+        rows = _block_rows(blocks)
+    finally:
+        cache.unpersist()
+    assert len(jobs) == 1, sorted(jobs)
+    assert rows == expected
+    assert len(rows) == min(parts, want)
 
 
 def test_lloyd_pass_empty_high_partition_rdd(spark):
@@ -320,18 +394,28 @@ def test_lloyd_pass_empty_high_partition_rdd(spark):
 
 
 def test_fit_failure_releases_caches(points, monkeypatch):
-    """r15 review gate: a failing pack/consolidate job must not leak
-    the input DataFrame cache or the transient packed persist.  dim=63
-    against 64-wide features makes _consolidate's reshape raise during
-    block materialization; afterwards the session must hold exactly the
-    persistent RDDs/relations it held before."""
+    """A failing fit must not leak the input DataFrame cache, the pack
+    or the re-cut blocks: afterwards the session holds exactly the
+    persistent RDDs/relations it held before.  dim=63 against 64-wide
+    features makes every reshape of the packed bytes raise.  On the
+    evenly split input the blocks are a view of the pack, so the error
+    surfaces in the first Lloyd pass; on a one-partition input it
+    surfaces inside `_features_blocks`' re-cut job, after both the pack
+    and the re-cut persist exist."""
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
+    from kmeans_mapreduce_spark.operators.kmeans import _features_blocks
 
     sc = points.sparkSession.sparkContext
-    # a small target forces the 1 < target < parts_in branch whose
-    # blocks.count() runs _consolidate inside _features_blocks
+    # a small target makes both inputs multi-block
     monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
     before = sc._jsc.getPersistentRDDs().size()
     with pytest.raises(Exception):
-        fit_kmeans_native(points, k=3, dim=63, seed=1)
+        fit_kmeans_native(points.repartition(4), k=3, dim=63, seed=1)
+    assert sc._jsc.getPersistentRDDs().size() == before
+    one_part = points.coalesce(1)
+    with pytest.raises(Exception):
+        _features_blocks(one_part.select("features"), 63)
+    assert sc._jsc.getPersistentRDDs().size() == before
+    with pytest.raises(Exception):
+        fit_kmeans_native(one_part, k=3, dim=63, seed=1)
     assert sc._jsc.getPersistentRDDs().size() == before

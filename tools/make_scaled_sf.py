@@ -76,6 +76,19 @@ def main() -> int:
     }
     passthrough = ("customer", "supplier", "part", "nation", "region")
 
+    # a shifted key collides with another copy's unless every source key
+    # is below its offset; check before anything is written
+    for t, col, off in (
+        ("lineitem", "l_orderkey", KEY_OFF),
+        ("orders", "o_orderkey", KEY_OFF),
+        ("events", "event_id", KEY_OFF),
+        ("documents", "doc_id", KEY_OFF),
+        ("embeddings", "vec_id", VEC_OFF),
+    ):
+        top = spark.read.parquet(f"{src}/{t}.parquet").agg(F.max(col)).first()[0]
+        if top is not None and top >= off:
+            raise ValueError(f"{t}.{col} max {top} >= offset {off}: copies would collide")
+
     for t in passthrough:
         df = spark.read.parquet(f"{src}/{t}.parquet")
         df.write.mode("overwrite").parquet(f"{dest}/{t}.parquet")
