@@ -20,8 +20,10 @@ worker.go).  The Spark-first re-expression:
                                                 cluster keeps old centroid
   computeDelta / stop rule (master.go:569-576,  mean centroid movement < 0.01
     :213-228, thresholds :55-56)                or 100 iterations
-  kMeanspp farthest-point init                  k-1 rounds of distributed
-    (master.go:157-190, worker.go:38-129)       max_by(id, min_dist) top-1
+  kMeanspp farthest-point init                  one pack; seeded first pick
+    (master.go:157-190, worker.go:38-129)       from its materializing job,
+                                                k-1 numpy farthest picks (in
+                                                one task for one block)
 
 Scale posture (the part the reference gets wrong at 100 TB):
   * memberships are NEVER collected — assignment stays a lazy column
@@ -167,49 +169,136 @@ def farthest_point_init(
 
     The reference calls this 'kMeanspp' (master.go:157-190) but it is NOT
     D^2-sampling k-means++: first centroid random, then k-1 rounds of
-    "farthest point from current centroid set" (worker.go:38-129).  Each
-    round here is one distributed top-1: min-distance per point (InitMap,
-    worker.go:232-245), per-partition argmax partial (InitCombine,
-    worker.go:271-285), global argmax final (InitReduce, worker.go:106-129)
-    — i.e. ``max_by`` with partial aggregation, a k-free shuffle of one
-    struct per partition.
+    "farthest point from current centroid set" (worker.go:38-129).
 
-    Unlike the reference's unseeded rand.Intn (master.go:160) the first
-    pick is seeded -> reproducible runs.
+    Runs on the numpy block engine.  ``(id as long, xxhash64(id, seed),
+    features)`` is packed ONCE by the Arrow pack stage the fit uses and
+    persisted MEMORY_AND_DISK.  The job that materializes the pack also
+    returns each partition's row count, width and lowest-``(hash, id)``
+    row, which is the seeded first pick (unlike the reference's unseeded
+    rand.Intn, master.go:160) at no extra job.  The fit's layout rule
+    (`_block_count`) then decides:
+
+    * one block: all k-1 picks run inside one task over the coalesced
+      pack, keeping ``md = fmin(md, d2(X, newest pick))`` per row — 2
+      Spark jobs in all;
+    * otherwise: one job per pick over the pack's partitions.  Each task
+      returns its farthest row from the centroids so far (InitMap and
+      InitCombine, worker.go:232-285), and the driver keeps the farthest
+      of those (InitReduce, worker.go:106-129) — k jobs in all.
+
+    Squared distances are `_sq_dists`, the fold `_block_stats` uses.  The
+    farthest row has the largest min distance, NaN counting as largest
+    (``fmin`` skips NaN like ``array_min``; a descending sort puts NaN
+    first), and ties break to the lowest id, so reruns are bit-identical.
+    An empty input raises ``ValueError``.  The pack is released on
+    return and on error.
     """
-    from pyspark.sql import types as T
+    import numpy as np
+    from pyspark import StorageLevel
 
-    spark = points.sparkSession
-    first = (
-        points.select(id_col, features_col)
-        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
-        .limit(1)
-        .collect()[0]
-    )
-    centroids: Centroids = [list(first[features_col])]
-    # Centroids ride a broadcast 1-row relation (same economics as the
-    # Lloyd loop: round-invariant plan + codegen, k x d doubles as
-    # broadcast data) rather than plan literals.
-    cent_schema = T.StructType(
-        [T.StructField("_C", T.ArrayType(T.ArrayType(T.DoubleType())))]
-    )
-    min_d2 = F.expr(
-        "array_min(transform(_C, c -> "
-        f"aggregate(zip_with({features_col}, c, (x, y) -> (x-y)*(x-y)), 0D, (s, v) -> s+v)))"
-    )
-    for _ in range(k - 1):
-        cent_df = spark.createDataFrame([(centroids,)], cent_schema)
-        # Deterministic tie-break on id so reruns are bit-identical.
-        far = (
-            points.select(F.col(id_col).alias("id"), features_col)
-            .crossJoin(F.broadcast(cent_df))
-            .select("id", features_col, min_d2.alias("min_d2"))
-            .orderBy(F.desc("min_d2"), F.asc("id"))
-            .limit(1)
-            .collect()[0]
+    pack = _arrow_pack(
+        points.select(
+            F.col(id_col).cast("long"),
+            F.xxhash64(F.col(id_col), F.lit(seed)),
+            features_col,
         )
-        centroids.append(list(far[features_col]))
-    return centroids
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        parts = pack.mapPartitions(_init_summary).collect()
+        total = sum(n for n, _, _ in parts)
+        if not total:
+            raise ValueError("farthest_point_init: the input points are empty")
+        dim = next(d for n, d, _ in parts if n)
+        first = min((c for _, _, c in parts if c is not None), key=lambda c: c[:2])
+        centroids: Centroids = [first[2]]
+        if k < 2:
+            return centroids
+        if _block_count(total, dim) == 1:
+            return centroids + (
+                pack.coalesce(1)
+                .mapPartitions(lambda rows: _init_picks(rows, centroids[0], k - 1))
+                .collect()[0]
+            )
+        for _ in range(k - 1):
+            C = np.asarray(centroids, dtype=np.float64)
+            cands = pack.mapPartitions(lambda rows: _init_candidate(rows, C)).collect()
+            j = _farthest(np.array([c[0] for c in cands]), np.array([c[1] for c in cands]))
+            centroids.append(cands[j][2])
+        return centroids
+    finally:
+        pack.unpersist()
+
+
+def _init_rows(rows):
+    """Stack one partition of the init pack into ``(ids, hashes, X)``,
+    in row order; None when it holds no rows."""
+    import numpy as np
+
+    parts = [
+        (
+            np.frombuffer(ib, dtype=np.int64),
+            np.frombuffer(hb, dtype=np.int64),
+            np.frombuffer(b, dtype=np.float64).reshape(int(m), -1),
+        )
+        for ib, hb, b, m in rows
+        if m
+    ]
+    if not parts:
+        return None
+    ids, h, mats = zip(*parts)
+    return np.concatenate(ids), np.concatenate(h), np.vstack(mats)
+
+
+def _init_summary(rows):
+    """One partition of the init pack -> ``(rows, width, first-pick
+    candidate)``, the candidate being ``(hash, id, features)`` of its
+    lowest-``(hash, id)`` row (None when the partition is empty)."""
+    import numpy as np
+
+    part = _init_rows(rows)
+    if part is None:
+        yield 0, 0, None
+        return
+    ids, h, X = part
+    j = np.lexsort((ids, h))[0]
+    yield len(ids), X.shape[1], (int(h[j]), int(ids[j]), X[j].tolist())
+
+
+def _farthest(md, ids) -> int:
+    """Index of the farthest row: largest ``md`` with NaN largest, ties
+    to the lowest id."""
+    import numpy as np
+
+    nan = np.isnan(md)
+    top = np.flatnonzero(nan) if nan.any() else np.flatnonzero(md == md.max())
+    return int(top[np.argmin(ids[top])])
+
+
+def _init_picks(rows, first, picks: int):
+    """All ``picks`` farthest points after ``first`` in one task over
+    the whole (one-block) init pack.  Yields the list of picks."""
+    import numpy as np
+
+    ids, _, X = _init_rows(rows)
+    out, md, new = [], None, np.asarray([first], dtype=np.float64)
+    for _ in range(picks):
+        md = _min_d2(X, new, md)
+        j = _farthest(md, ids)
+        out.append(X[j].tolist())
+        new = X[j : j + 1]
+    yield out
+
+
+def _init_candidate(rows, C):
+    """One partition's farthest row from centroids ``C``, as ``(min
+    distance, id, features)``."""
+    part = _init_rows(rows)
+    if part is not None:
+        ids, _, X = part
+        md = _min_d2(X, C)
+        j = _farthest(md, ids)
+        yield float(md[j]), int(ids[j]), X[j].tolist()
 
 
 @dataclass
@@ -239,6 +328,59 @@ class KMeansResult:
 #: data, dominates tiny inputs); a large one as about one block per
 #: ``_BLOCK_TARGET_BYTES``.
 _BLOCK_TARGET_BYTES = 64 << 20
+
+
+def _block_count(total: int, dim: int) -> int:
+    """Blocks of about ``_BLOCK_TARGET_BYTES`` of float64 features that
+    ``total`` rows of width ``dim`` want: the one layout rule the fit
+    (`_features_blocks`) and the init (`farthest_point_init`) share."""
+    return max(1, -(-(total * dim * 8) // _BLOCK_TARGET_BYTES))
+
+
+def _arrow_pack(df: DataFrame):
+    """The Arrow pack stage: each Arrow batch of ``df`` becomes ONE
+    plain tuple (no per-row pickling) of the int64 bytes of each leading
+    column, the float64 bytes of the last (array) column's flattened
+    values, and the batch's row count.  Returns the RDD of tuples."""
+    import numpy as np
+    import pyarrow as pa
+
+    names = [f"c{i}" for i in range(len(df.columns) - 1)]
+
+    def _pack(batches):
+        for batch in batches:
+            *scalars, col = batch.columns
+            out = {
+                name: [np.ascontiguousarray(s.to_numpy(zero_copy_only=False), dtype=np.int64).tobytes()]
+                for name, s in zip(names, scalars)
+            }
+            flat = col.flatten().to_numpy(zero_copy_only=False)
+            out["b"] = [np.ascontiguousarray(flat, dtype=np.float64).tobytes()]
+            out["n"] = [len(col)]
+            yield pa.RecordBatch.from_pydict(out)
+
+    schema = ", ".join([f"{name} binary" for name in names] + ["b binary", "n long"])
+    return df.mapInArrow(_pack, schema=schema).rdd.map(tuple)
+
+
+def _consolidate(rows, dim: int):
+    """``(bytes, n)`` pieces -> one (n x dim) float64 block, in row
+    order (nothing for no rows)."""
+    import numpy as np
+
+    mats = [np.frombuffer(b, dtype=np.float64).reshape(int(n), dim) for b, n in rows]
+    mats = [m for m in mats if m.size]
+    if mats:
+        # vstack keeps row order: same fold as iterating the batches
+        yield mats[0] if len(mats) == 1 else np.vstack(mats)
+
+
+def _regroup(items, dim: int):
+    """One re-cut block from its ``(block, (global offset, bytes, n))``
+    pieces, sorted by global row offset: its contents do not depend on
+    the order the shuffle fetched them in."""
+    pieces = sorted((v for _, v in items), key=lambda v: v[0])
+    return _consolidate(((b, n) for _, b, n in pieces), dim)
 
 
 def _features_blocks(points: DataFrame, dim: int, features_col: str = "features"):
@@ -274,41 +416,21 @@ def _features_blocks(points: DataFrame, dim: int, features_col: str = "features"
     below one block, nor on partitions within 2x of each other.
     """
     import numpy as np
-    import pyarrow as pa
     from pyspark import StorageLevel
-
-    def _pack(batches):
-        for batch in batches:
-            col = batch.column(0)
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            arr = np.ascontiguousarray(flat, dtype=np.float64)
-            yield pa.RecordBatch.from_pydict({"b": [arr.tobytes()], "n": [len(col)]})
-
-    def _consolidate(rows):
-        mats = [np.frombuffer(b, dtype=np.float64).reshape(int(n), dim) for b, n in rows]
-        mats = [m for m in mats if m.size]
-        if mats:
-            # vstack keeps row order: same fold as iterating the batches
-            yield mats[0] if len(mats) == 1 else np.vstack(mats)
 
     # MEMORY_AND_DISK, not PySpark's MEMORY_ONLY default: evicted blocks
     # would otherwise re-run the scan and pack on every Lloyd pass
     level = StorageLevel.MEMORY_AND_DISK
-    pack = (
-        points.select(features_col)
-        .mapInArrow(_pack, schema="b binary, n long")
-        .rdd.map(lambda r: (r[0], r[1]))
-        .persist(level)
-    )
+    pack = _arrow_pack(points.select(features_col)).persist(level)
     blocks = None
     try:
         ns = pack.mapPartitions(lambda rows: [sum(int(n) for _, n in rows)]).collect()
         total = sum(ns)
-        want = max(1, -(-(total * dim * 8) // _BLOCK_TARGET_BYTES))
+        want = _block_count(total, dim)
         fair = total / min(want, pack.context.defaultParallelism)
         if want == 1 or max(ns) < 2 * fair:
             view = pack.coalesce(want) if want < len(ns) else pack
-            return view.mapPartitions(_consolidate), pack
+            return view.mapPartitions(lambda rows: _consolidate(rows, dim)), pack
 
         def _cut(i, rows):
             # block j holds the global rows [j*total//want, (j+1)*total//want);
@@ -324,14 +446,10 @@ def _features_blocks(points: DataFrame, dim: int, features_col: str = "features"
                     lo = hi
                 g += len(X)
 
-        def _regroup(items):
-            pieces = sorted((v for _, v in items), key=lambda v: v[0])
-            return _consolidate((b, n) for _, b, n in pieces)
-
         blocks = (
             pack.mapPartitionsWithIndex(_cut)
             .partitionBy(want, lambda j: j)
-            .mapPartitions(_regroup)
+            .mapPartitions(lambda items: _regroup(items, dim))
             .persist(level)
         )
         blocks.count()  # materialize before releasing the pack
@@ -361,7 +479,8 @@ def _block_stats(X, C, k: int, d: int, want_wssse: bool):
     pass (`_lloyd_pass`) and the single-block in-task loop
     (`_fit_single_block`), so the two execution shapes cannot drift:
       * squared distance accumulates per-dimension left-to-right
-        (the zip_with/aggregate fold order of the DataFrame loop);
+        (`_sq_dists`: the zip_with/aggregate fold order of the
+        DataFrame loop, shared with farthest-point init);
       * argmin ties break to the lowest cluster index (np.argmin's
         first-occurrence == array_position of array_min);
       * per-cluster sums fold rows in block order — sequential
@@ -399,20 +518,11 @@ def _block_stats(X, C, k: int, d: int, want_wssse: bool):
     a = np.empty(n, dtype=np.int64)
     md = np.empty(n, dtype=np.float64) if want_wssse else None
     m0 = min(n, _CHUNK_ROWS)
-    D = np.zeros((m0, k), dtype=np.float64)
+    D = np.empty((m0, k), dtype=np.float64)
     buf = np.empty((m0, k), dtype=np.float64)
     for lo in range(0, n, _CHUNK_ROWS):
         hi = min(n, lo + _CHUNK_ROWS)
-        Db = D[: hi - lo]
-        bb = buf[: hi - lo]
-        Db.fill(0.0)
-        Xc = X[lo:hi]
-        for j in range(d):
-            # identical values/order to `D += diff * diff` with
-            # diff = X[:, j, None] - C[None, :, j]; just buffer-reusing
-            np.subtract(Xc[:, j, None], C[None, :, j], out=bb)
-            np.multiply(bb, bb, out=bb)
-            Db += bb
+        Db = _sq_dists(X[lo:hi], C, D[: hi - lo], buf[: hi - lo])
         ac = Db.argmin(axis=1)
         a[lo:hi] = ac
         if want_wssse:
@@ -424,6 +534,44 @@ def _block_stats(X, C, k: int, d: int, want_wssse: bool):
             s[c] = _seq_sum_rows(X[idx])
     w = float(np.cumsum(md)[-1]) if want_wssse else 0.0
     return (cnt, s, w)
+
+
+def _sq_dists(Xc, C, out, buf):
+    """Squared distances of each row of ``Xc`` (m x d) to each row of
+    ``C`` (k x d), written into ``out`` (m x k, returned); ``buf`` is
+    scratch of the same shape.  THE distance kernel of the engine: the
+    per-dimension left-to-right fold of the DataFrame expression
+    ``aggregate(zip_with(x, c, (x-y)*(x-y)), 0D, (s, v) -> s+v)``."""
+    import numpy as np
+
+    out.fill(0.0)
+    for j in range(Xc.shape[1]):
+        # identical values/order to `out += diff * diff` with
+        # diff = Xc[:, j, None] - C[None, :, j]; just buffer-reusing
+        np.subtract(Xc[:, j, None], C[None, :, j], out=buf)
+        np.multiply(buf, buf, out=buf)
+        out += buf
+    return out
+
+
+def _min_d2(X, C, md=None):
+    """Per-row min squared distance from ``X`` to the rows of ``C``,
+    folded into ``md`` when given (in place).  ``np.fmin`` skips NaN as
+    Spark's ``array_min`` does; min is exact, so folding the centroids
+    in one at a time gives the minimum over all of them."""
+    import numpy as np
+
+    n, k = X.shape[0], C.shape[0]
+    if md is None:
+        md = np.full(n, np.nan)
+    m0 = min(n, _CHUNK_ROWS)
+    D = np.empty((m0, k), dtype=np.float64)
+    buf = np.empty((m0, k), dtype=np.float64)
+    for lo in range(0, n, _CHUNK_ROWS):
+        hi = min(n, lo + _CHUNK_ROWS)
+        Db = _sq_dists(X[lo:hi], C, D[: hi - lo], buf[: hi - lo])
+        np.fmin(md[lo:hi], np.fmin.reduce(Db, axis=1), out=md[lo:hi])
+    return md
 
 
 def _seq_sum_rows(M):
@@ -609,13 +757,14 @@ def fit_kmeans_native(
 
     Pass ``cache_input=False`` when the caller already manages a cache
     that covers ``points`` (the numpy block cache is built either way;
-    the DataFrame cache only pays for itself during farthest-point
-    init, which scans ``points`` k-1 more times).
+    the DataFrame cache only pays for itself when farthest-point init
+    runs, because the init pack and the block pack both read
+    ``points``).
     """
     points = points.select("id", "features")
-    # The DataFrame cache only pays during farthest-point init (k-1
-    # extra scans of `points`); the loop itself reads the numpy block
-    # cache.  Callers that pass explicit centroids skip it entirely.
+    # The DataFrame cache only pays when init runs: its pack and the
+    # block pack both read `points`, while the loop itself reads the
+    # numpy block cache.  Callers that pass explicit centroids skip it.
     df_cached = cache_input and initial_centroids is None
     if df_cached:
         points = points.cache()

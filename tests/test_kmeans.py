@@ -29,6 +29,52 @@ from kmeans_mapreduce_spark.operators.kmeans import (
 K, DIM = 6, 64
 
 
+def _farthest_point_init_df(
+    points,
+    k: int,
+    seed: int = 42,
+    features_col: str = "features",
+    id_col: str = "id",
+):
+    """The DataFrame farthest-point init `farthest_point_init` replaced,
+    kept unchanged as its bitwise reference: k-1 Catalyst plans, each a
+    broadcast crossJoin, a zip_with/aggregate distance and a sort-limit
+    top-1 (2k-1 Spark jobs)."""
+    from pyspark.sql import types as T
+
+    spark = points.sparkSession
+    first = (
+        points.select(id_col, features_col)
+        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
+        .limit(1)
+        .collect()[0]
+    )
+    centroids = [list(first[features_col])]
+    # Centroids ride a broadcast 1-row relation (same economics as the
+    # Lloyd loop: round-invariant plan + codegen, k x d doubles as
+    # broadcast data) rather than plan literals.
+    cent_schema = T.StructType(
+        [T.StructField("_C", T.ArrayType(T.ArrayType(T.DoubleType())))]
+    )
+    min_d2 = F.expr(
+        "array_min(transform(_C, c -> "
+        f"aggregate(zip_with({features_col}, c, (x, y) -> (x-y)*(x-y)), 0D, (s, v) -> s+v)))"
+    )
+    for _ in range(k - 1):
+        cent_df = spark.createDataFrame([(centroids,)], cent_schema)
+        # Deterministic tie-break on id so reruns are bit-identical.
+        far = (
+            points.select(F.col(id_col).alias("id"), features_col)
+            .crossJoin(F.broadcast(cent_df))
+            .select("id", features_col, min_d2.alias("min_d2"))
+            .orderBy(F.desc("min_d2"), F.asc("id"))
+            .limit(1)
+            .collect()[0]
+        )
+        centroids.append(list(far[features_col]))
+    return centroids
+
+
 @pytest.fixture(scope="module")
 def fitted(points):
     res = fit_kmeans_native(points, k=K, dim=DIM, seed=42, track_wssse=True)
@@ -419,3 +465,123 @@ def test_fit_failure_releases_caches(points, monkeypatch):
     with pytest.raises(Exception):
         fit_kmeans_native(one_part, k=3, dim=63, seed=1)
     assert sc._jsc.getPersistentRDDs().size() == before
+
+
+@pytest.fixture(scope="module")
+def init_inputs(points):
+    """Inputs for the init parity pin, with ids not in row order:
+
+    * ``ties``: 1000 vectors on the integer grid {0..3}^8, so distinct
+      rows often sit at the same distance and a pick is a tie the lowest
+      id must win.  Every vector appears twice, the lower-id copy later
+      in row order.  An int id column (its xxhash64 differs from a
+      long's) and array<float> features.
+    * ``nan``: the fixture's first 300 vectors, long ids, array<double>
+      features, one NaN coordinate."""
+    import random
+
+    rng = random.Random(5)
+    spark = points.sparkSession
+    grid = [[float(rng.randrange(4)) for _ in range(8)] for _ in range(1000)]
+    perm = rng.sample(range(len(grid)), len(grid))
+    ties = [(2 * p + 1, f) for p, f in zip(perm, grid)]
+    ties += [(2 * p, f) for p, f in zip(perm, grid)]
+    feats = [list(r["features"]) for r in points.orderBy("id").limit(300).collect()]
+    nan = [(p, f) for p, f in zip(rng.sample(range(len(feats)), len(feats)), feats)]
+    nan[7][1][3] = float("nan")
+    sc = spark.sparkContext
+    return {
+        "ties": spark.createDataFrame(sc.parallelize(ties, 4), "id int, features array<float>"),
+        "nan": spark.createDataFrame(sc.parallelize(nan, 4), "id long, features array<double>"),
+    }
+
+
+def _bits(centroids):
+    import numpy as np
+
+    return np.asarray(centroids, dtype=np.float64).tobytes()
+
+
+@pytest.mark.parametrize("variant", ["ties", "nan"])
+@pytest.mark.parametrize("layout", ["one_block", "multi_block", "coalesce1"])
+def test_farthest_point_init_matches_dataframe_reference(
+    init_inputs, monkeypatch, layout, variant
+):
+    """The numpy init returns bit-identical picks to the DataFrame init
+    it replaced, in one task (one block) and one job per pick (a 64 KiB
+    block target, over several partitions or one)."""
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+
+    df = init_inputs[variant]
+    if layout == "coalesce1":
+        df = df.coalesce(1)
+    if layout != "one_block":
+        monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
+    for seed in (3, 11):
+        got = farthest_point_init(df, 5, seed=seed)
+        want = _farthest_point_init_df(df, 5, seed=seed)
+        assert len(got) == len(want) == 5
+        assert _bits(got) == _bits(want), (layout, variant, seed)
+
+
+@pytest.mark.parametrize("layout", ["one_block", "multi_block"])
+def test_farthest_point_init_job_count(points, monkeypatch, layout):
+    """One block: the pack's materializing job (which also yields the
+    first pick) and one fused job for every other pick.  Multi-block:
+    that job plus one job per pick, k in all."""
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+
+    if layout == "multi_block":
+        monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
+    k = 4
+    sc = points.sparkSession.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    got = farthest_point_init(points, k, seed=5)
+    jobs = set(sc.statusTracker().getJobIdsForGroup()) - before
+    assert len(got) == k
+    assert len(jobs) == (2 if layout == "one_block" else k), sorted(jobs)
+
+
+@pytest.mark.parametrize("layout", ["one_block", "multi_block"])
+def test_farthest_point_init_failure_releases_pack(points, monkeypatch, layout):
+    """A pick job that raises leaves the session's persistent RDDs as
+    they were: the init pack is released on error."""
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+
+    def boom(*_):
+        raise RuntimeError("pick job failed")
+
+    if layout == "multi_block":
+        monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
+    # the pick tasks resolve these names when their closure is pickled
+    monkeypatch.setattr(K_mod, "_init_picks", boom)
+    monkeypatch.setattr(K_mod, "_init_candidate", boom)
+    sc = points.sparkSession.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="pick job failed"):
+        farthest_point_init(points, 3, seed=1)
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_farthest_point_init_empty_input(points):
+    """An empty input raises a ValueError naming it, and releases the
+    pack."""
+    sc = points.sparkSession.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="empty"):
+        farthest_point_init(points.where(F.col("id") < 0), 3)
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_regroup_sorts_pieces_by_global_offset():
+    """A re-cut block is assembled in global row order whatever order the
+    shuffle fetched its pieces in."""
+    import numpy as np
+
+    from kmeans_mapreduce_spark.operators.kmeans import _regroup
+
+    X = np.arange(40.0).reshape(10, 4)
+    cuts = [(0, 3), (3, 4), (4, 9), (9, 10)]
+    pieces = [(2, (lo, X[lo:hi].tobytes(), hi - lo)) for lo, hi in cuts]
+    out = list(_regroup(reversed(pieces), 4))
+    assert len(out) == 1 and out[0].tobytes() == X.tobytes()
