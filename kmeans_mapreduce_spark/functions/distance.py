@@ -1,31 +1,85 @@
-"""Vector-distance column builders — pure Catalyst expressions, no UDFs.
+"""Vector distance and nearest-centroid expressions — pure Catalyst,
+no UDFs.
 
 Reference parity: ``GetDistance`` (reference utils/utils.go:46-54) is
-``sqrt(sum((p1_i - p2_i)^2))`` over a dense float64 vector.  Here each
-metric is a Column expression over ``array<double>`` columns, so it stays
-inside whole-stage codegen: the JVM evaluates the fold per row with zero
-Python round-trips.  ``(x-y)*(x-y)`` (not ``pow``) keeps the IEEE op
-sequence identical to a left-to-right SQL sum, which lets DuckDB oracles
-reproduce results bit-for-bit.
+``sqrt(sum((p1_i - p2_i)^2))`` over a dense float64 vector, and
+``classify`` (worker.go:288-304) the index of the nearest centroid.
+Every Spark site that needs either builds it from the SQL-text
+functions below, written once each:
+
+  sq_dist_sql            the squared-distance fold of two arrays
+  centroid_dists_sql     the array of fold values to each centroid of
+                         an array<array<...>> (a plan literal, a
+                         broadcast column or a codebook slice)
+  argmin_sql             the index of the smallest of those distances
+  centroids_sql_literal  the centroid matrix as an exact SQL literal
+
+The fold is ``aggregate(zip_with(a, b, (x-y)*(x-y)), zero, +)``:
+``(x-y)*(x-y)`` (not ``pow``) keeps the IEEE op sequence identical to a
+left-to-right SQL sum, which lets DuckDB oracles and the numpy block
+engine (`operators/kmeans._sq_dists`) reproduce results bit-for-bit.
+SQL text, not nested Column objects: a k x d literal as Column trees
+costs one py4j round trip per element (building and analyzing the
+distance array at k=16, d=64 took 0.8 s of driver time on a 4-core
+host, the same SQL text 0.13 s).  The argmin breaks ties to the
+lowest index and skips NaN distances (``array_min`` does), so an
+all-NaN row lands on index 0.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def squared_euclidean(a: Column | str, b: Column | str) -> Column:
-    """sum_i (a_i - b_i)^2 — left-to-right fold over dimensions."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def sq_dist_sql(a: str, b: str, zero: str = "0D") -> str:
+    """sum_i (a_i - b_i)^2 as SQL text — left-to-right fold over
+    dimensions, starting at ``zero`` (``0L`` for integer vectors)."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> (x-y)*(x-y)), {zero}, (s, v) -> s+v)"
+
+
+def centroid_dists_sql(features: str, centroids: str, zero: str = "0D") -> str:
+    """SQL array of the squared distances from ``features`` to each
+    element of the array-of-vectors expression ``centroids``."""
+    return f"transform({centroids}, c -> {sq_dist_sql(features, 'c', zero)})"
+
+
+def argmin_sql(dists: str) -> str:
+    """0-based int index of the smallest element of the SQL array
+    ``dists`` (first occurrence; NaN skipped).  The array is bound once
+    through a transform over a singleton, so it is not evaluated twice
+    for ``array_min`` and ``array_position``."""
+    return (
+        f"element_at(transform(array({dists}), "
+        "ds -> cast(array_position(ds, array_min(ds)) - 1 as int)), 1)"
     )
 
 
-def euclidean(a: Column | str, b: Column | str) -> Column:
+def _double_sql(x) -> str:
+    """One exact double literal: ``repr`` round-trips finite doubles;
+    NaN and +-inf go through a cast Spark's parser accepts."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    if math.isnan(x):
+        return "double('NaN')"
+    return "double('Infinity')" if x > 0 else "double('-Infinity')"
+
+
+def centroids_sql_literal(centroids) -> str:
+    """array<array<double>> SQL literal of a k x d centroid matrix."""
+    rows = ",".join("array(" + ",".join(_double_sql(x) for x in c) + ")" for c in centroids)
+    return f"array({rows})"
+
+
+def squared_euclidean(a: str, b: str) -> Column:
+    """sum_i (a_i - b_i)^2 of two array columns (names or SQL)."""
+    return F.expr(sq_dist_sql(a, b))
+
+
+def euclidean(a: str, b: str) -> Column:
     """sqrt(sum (a_i-b_i)^2) — parity with reference utils/utils.go:46-54."""
     return F.sqrt(squared_euclidean(a, b))
 

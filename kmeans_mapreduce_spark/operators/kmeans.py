@@ -3,21 +3,26 @@
 This is the heart of the reference engine (the whole of master.go /
 worker.go).  The Spark-first re-expression:
 
-  reference (Go MapReduce over RPC)             here (DataFrame plans)
+  reference (Go MapReduce over RPC)             here (numpy blocks on Spark)
   -------------------------------------------   -------------------------------
   getChunks partitioner (master.go:511-547)     _features_blocks: one block
                                                 layout from exact row counts
   worker chunk cache (worker.go:54-60)          packed feature blocks,
                                                 persisted once
-  Map: classify (worker.go:288-304)             argmin over a centroid literal
-                                                array — broadcast-by-literal,
-                                                whole-stage codegen, no join
-  Combine partial sums (worker.go:169-189)      Catalyst partial HashAggregate
-  shuffleAndSort (master.go:374-411)            Exchange hash(cid) — implicit
-  Reduce recenter (worker.go:307-319)           groupBy(cid).agg(count, per-dim
-                                                sums) -> k x (d+1) rows
-  computeNewCentroids (master.go:579-600)       sum/count on the driver; empty
-                                                cluster keeps old centroid
+  Map: classify (worker.go:288-304)             _block_stats: numpy distances
+                                                (_sq_dists) and SQL's argmin
+                                                (_argmin_rows) in 64k-row
+                                                chunks, one task per block
+  Combine partial sums (worker.go:169-189)      _block_stats: per-cluster
+                                                count and row-order sums of
+                                                each block
+  shuffleAndSort (master.go:374-411)            none: k x (d+1) partials per
+                                                block go to the driver
+                                                (_lloyd_pass), merged in
+                                                partition order
+  Reduce recenter (worker.go:307-319) +         _update_centroids: sum/count
+    computeNewCentroids (master.go:579-600)     on the driver; an empty
+                                                cluster keeps its centroid
   computeDelta / stop rule (master.go:569-576,  mean centroid movement < 0.01
     :213-228, thresholds :55-56)                or 100 iterations
   kMeanspp farthest-point init                  one pack; seeded first pick
@@ -29,9 +34,13 @@ Scale posture (the part the reference gets wrong at 100 TB):
   * memberships are NEVER collected — assignment stays a lazy column
     (the reference merges every point into driver RAM, master.go:603-638);
   * driver-resident state is exactly the k x d centroid matrix;
-  * per iteration the cluster reads the cached features once, shuffles
-    k x (d+1) partial aggregates per partition, and ships k x (d+1)
-    finals to the driver — bytes independent of N.
+  * per iteration the cluster reads the cached features once and ships
+    k x (d+1) partials per block to the driver — bytes independent of N
+    (one block runs the whole loop in one task).
+
+DataFrame assignment (`assign_clusters`, `assign_clusters_broadcast`)
+labels points for reports and catalog queries; its distance and argmin
+come from the SQL-text functions in `functions.distance`.
 """
 
 from __future__ import annotations
@@ -42,7 +51,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kmeans_mapreduce_spark.functions.distance import squared_euclidean
+from kmeans_mapreduce_spark.functions.distance import (
+    argmin_sql,
+    centroid_dists_sql,
+    centroids_sql_literal,
+)
 
 DELTA_THRESHOLD = 0.01  # reference master.go:55
 ITERATION_THRESHOLD = 100  # reference master.go:56
@@ -50,24 +63,14 @@ ITERATION_THRESHOLD = 100  # reference master.go:56
 Centroids = list[list[float]]
 
 
-def _lit_vec(vec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
-
-
-def _dist2_to_centroids(features: str | Column, centroids: Centroids) -> Column:
+def _dist2_to_centroids(features: str, centroids: Centroids) -> Column:
     """array<double> of squared distances to each centroid.
 
-    Centroids are inlined as literals: k x d doubles folded into the
-    plan, the moral equivalent of a broadcast variable but visible to
-    Catalyst (constant-folded, codegen'd).  No crossJoin, no shuffle.
+    Centroids are inlined as one SQL literal: k x d doubles folded into
+    the plan, the moral equivalent of a broadcast variable but visible
+    to Catalyst (constant-folded, codegen'd).  No crossJoin, no shuffle.
     """
-    return F.array(*[squared_euclidean(features, _lit_vec(c)) for c in centroids])
-
-
-def _centroids_sql_literal(centroids: Centroids) -> str:
-    """array<array<double>> SQL literal; repr() keeps exact doubles."""
-    rows = ",".join("array(" + ",".join(f"{float(x)!r}D" for x in c) + ")" for c in centroids)
-    return f"array({rows})"
+    return F.expr(centroid_dists_sql(features, centroids_sql_literal(centroids)))
 
 
 def assign_clusters(
@@ -83,29 +86,10 @@ def assign_clusters(
     Built as ONE SQL expression string rather than nested Column objects:
     k x d literals as Column trees cost hundreds of py4j round-trips per
     call, which dominates driver time in the iterative loop (~0.3s/iter
-    measured).  The distance array is bound once via transform-over-
-    singleton so argmin doesn't evaluate it twice.
+    measured).
     """
-    c_lit = _centroids_sql_literal(centroids)
-    dists = (
-        f"transform({c_lit}, c -> "
-        f"aggregate(zip_with({features_col}, c, (x, y) -> (x-y)*(x-y)), 0D, (s, v) -> s+v))"
-    )
-    expr = (
-        f"element_at(transform(array({dists}), "
-        f"ds -> cast(array_position(ds, array_min(ds)) - 1 as int)), 1)"
-    )
-    return points.withColumn("cluster_id", F.expr(expr))
-
-
-def _assign_expr(features_col: str = "features") -> Column:
-    """argmin-over-broadcast-centroids expression; expects a ``_C``
-    column (array<array<double>>) from a broadcast 1-row relation."""
-    return F.expr(
-        "element_at(transform(array(transform(_C, c -> "
-        f"aggregate(zip_with({features_col}, c, (x, y) -> (x-y)*(x-y)), 0D, (s, v) -> s+v))), "
-        "ds -> cast(array_position(ds, array_min(ds)) - 1 as int)), 1)"
-    )
+    dists = centroid_dists_sql(features_col, centroids_sql_literal(centroids))
+    return points.withColumn("cluster_id", F.expr(argmin_sql(dists)))
 
 
 def assign_clusters_broadcast(
@@ -128,11 +112,27 @@ def assign_clusters_broadcast(
         [T.StructField("_C", T.ArrayType(T.ArrayType(T.DoubleType())))]
     )
     cent_df = spark.createDataFrame([([list(c) for c in centroids],)], cent_schema)
+    assign = F.expr(argmin_sql(centroid_dists_sql(features_col, "_C")))
     return (
         points.crossJoin(F.broadcast(cent_df))
-        .withColumn("cluster_id", _assign_expr(features_col))
+        .withColumn("cluster_id", assign)
         .drop("_C")
     )
+
+
+def assign_clusters_auto(
+    points: DataFrame, centroids: Centroids, features_col: str = "features"
+) -> DataFrame:
+    """``assign_clusters`` for up to 8 centroids, where plan literals
+    keep the scoring stage in whole-stage codegen with no join node;
+    ``assign_clusters_broadcast`` above, where a sqrt(N) x d literal
+    plan would blow up codegen.  The cutoff is measured: on the 60k-edge
+    kNN-graph build at the 100x stress point the relation path's extra
+    join pushed the pair-scoring stage out of codegen and ran 9.6x
+    slower (964 s vs 101 s, same output)."""
+    if len(centroids) <= 8:
+        return assign_clusters(points, centroids, features_col)
+    return assign_clusters_broadcast(points, centroids, features_col)
 
 
 def recenter(assigned: DataFrame, dim: int, features_col: str = "features") -> DataFrame:
@@ -462,11 +462,11 @@ def _features_blocks(points: DataFrame, dim: int, features_col: str = "features"
     return blocks, blocks
 
 
-#: rows per distance-scratch chunk in `_block_stats`: 64k rows x k=4
+#: rows per distance-scratch chunk (`_chunk_dists`): 64k rows x k=4
 #: doubles = 2 MB per buffer — L2/L3-resident and small enough that the
 #: allocator recycles it without mmap round-trips (first-touch page
 #: faults on fresh ~100 MB scratch dominated per-pass time at 64 MB
-#: blocks).  Chunking is fold-neutral: see the function docstring.
+#: blocks).  Chunking is fold-neutral: see `_block_stats`.
 _CHUNK_ROWS = 1 << 16
 
 
@@ -479,10 +479,11 @@ def _block_stats(X, C, k: int, d: int, want_wssse: bool):
     pass (`_lloyd_pass`) and the single-block in-task loop
     (`_fit_single_block`), so the two execution shapes cannot drift:
       * squared distance accumulates per-dimension left-to-right
-        (`_sq_dists`: the zip_with/aggregate fold order of the
-        DataFrame loop, shared with farthest-point init);
-      * argmin ties break to the lowest cluster index (np.argmin's
-        first-occurrence == array_position of array_min);
+        (`_sq_dists`: the fold order of
+        `functions.distance.sq_dist_sql`, shared with farthest-point
+        init through `_chunk_dists`);
+      * the argmin is SQL's (`_argmin_rows`): ties break to the lowest
+        cluster index and NaN distances are skipped;
       * per-cluster sums fold rows in block order — sequential
         accumulation (see `_seq_sum_rows`).
 
@@ -497,8 +498,8 @@ def _block_stats(X, C, k: int, d: int, want_wssse: bool):
 
     r16 opt (bit-identical by construction, pinned by the reference
     test across chunk boundaries): distances + argmin run in
-    ``_CHUNK_ROWS``-row chunks over small reused scratch instead of
-    two full (n x k) matrices.  Per-row work is independent, so
+    ``_CHUNK_ROWS``-row chunks (`_chunk_dists`) over small reused
+    scratch instead of two full (n x k) matrices.  Per-row work is independent, so
     chunking changes no fold; the wssse fold stays whole-array (the
     chunks only FILL the per-row min-distance vector, the cumsum runs
     over all n as before).  Why: the full-width scratch was ~100 MB of
@@ -517,13 +518,8 @@ def _block_stats(X, C, k: int, d: int, want_wssse: bool):
     n = X.shape[0]
     a = np.empty(n, dtype=np.int64)
     md = np.empty(n, dtype=np.float64) if want_wssse else None
-    m0 = min(n, _CHUNK_ROWS)
-    D = np.empty((m0, k), dtype=np.float64)
-    buf = np.empty((m0, k), dtype=np.float64)
-    for lo in range(0, n, _CHUNK_ROWS):
-        hi = min(n, lo + _CHUNK_ROWS)
-        Db = _sq_dists(X[lo:hi], C, D[: hi - lo], buf[: hi - lo])
-        ac = Db.argmin(axis=1)
+    for lo, hi, Db in _chunk_dists(X, C):
+        ac = _argmin_rows(Db)
         a[lo:hi] = ac
         if want_wssse:
             md[lo:hi] = Db[np.arange(hi - lo), ac]
@@ -540,8 +536,8 @@ def _sq_dists(Xc, C, out, buf):
     """Squared distances of each row of ``Xc`` (m x d) to each row of
     ``C`` (k x d), written into ``out`` (m x k, returned); ``buf`` is
     scratch of the same shape.  THE distance kernel of the engine: the
-    per-dimension left-to-right fold of the DataFrame expression
-    ``aggregate(zip_with(x, c, (x-y)*(x-y)), 0D, (s, v) -> s+v)``."""
+    per-dimension left-to-right fold of the Spark expression
+    `functions.distance.sq_dist_sql` builds."""
     import numpy as np
 
     out.fill(0.0)
@@ -554,6 +550,38 @@ def _sq_dists(Xc, C, out, buf):
     return out
 
 
+def _chunk_dists(X, C):
+    """Yield ``(lo, hi, D)`` over ``X`` in ``_CHUNK_ROWS``-row chunks,
+    ``D`` the (hi-lo x k) `_sq_dists` of rows ``lo:hi`` to ``C``, written
+    into one scratch reused across chunks (valid until the next yield).
+    Per-row work is independent, so chunking changes no fold."""
+    import numpy as np
+
+    n, k = X.shape[0], C.shape[0]
+    m0 = min(n, _CHUNK_ROWS)
+    D = np.empty((m0, k), dtype=np.float64)
+    buf = np.empty((m0, k), dtype=np.float64)
+    for lo in range(0, n, _CHUNK_ROWS):
+        hi = min(n, lo + _CHUNK_ROWS)
+        yield lo, hi, _sq_dists(X[lo:hi], C, D[: hi - lo], buf[: hi - lo])
+
+
+def _argmin_rows(D):
+    """Per-row index of the smallest distance, as the SQL argmin
+    (`functions.distance.argmin_sql`) picks it: the first minimum,
+    NaN skipped, index 0 for an all-NaN row.  ``np.argmin`` agrees
+    except where it lands on a NaN (it returns the first NaN); only
+    those rows are re-resolved, so finite data never takes the branch."""
+    import numpy as np
+
+    ac = D.argmin(axis=1)
+    bad = np.flatnonzero(np.isnan(D[np.arange(len(ac)), ac]))
+    if bad.size:
+        sub = D[bad]
+        ac[bad] = np.argmax(sub == np.fmin.reduce(sub, axis=1)[:, None], axis=1)
+    return ac
+
+
 def _min_d2(X, C, md=None):
     """Per-row min squared distance from ``X`` to the rows of ``C``,
     folded into ``md`` when given (in place).  ``np.fmin`` skips NaN as
@@ -561,15 +589,9 @@ def _min_d2(X, C, md=None):
     in one at a time gives the minimum over all of them."""
     import numpy as np
 
-    n, k = X.shape[0], C.shape[0]
     if md is None:
-        md = np.full(n, np.nan)
-    m0 = min(n, _CHUNK_ROWS)
-    D = np.empty((m0, k), dtype=np.float64)
-    buf = np.empty((m0, k), dtype=np.float64)
-    for lo in range(0, n, _CHUNK_ROWS):
-        hi = min(n, lo + _CHUNK_ROWS)
-        Db = _sq_dists(X[lo:hi], C, D[: hi - lo], buf[: hi - lo])
+        md = np.full(X.shape[0], np.nan)
+    for lo, hi, Db in _chunk_dists(X, C):
         np.fmin(md[lo:hi], np.fmin.reduce(Db, axis=1), out=md[lo:hi])
     return md
 
@@ -750,8 +772,8 @@ def fit_kmeans_native(
     independent of N, and the per-row distance math vectorized in numpy.
     A single block runs the whole loop inside one task: one job for all
     iterations.  Both shapes share `_block_stats` and `_lloyd_iterate`,
-    so they follow the same trajectory; `_fit_kmeans_native_df` keeps
-    the DataFrame loop the tests pin this engine to.  The cache
+    so they follow the same trajectory, which the tests pin bitwise to
+    a DataFrame-expression Lloyd loop (kept in the tests).  The cache
     `_features_blocks` hands back is released in this function's
     ``finally``, on success and on error.
 
@@ -817,88 +839,6 @@ def fit_kmeans_native(
         if cache is not None:
             cache.unpersist()
         if df_cached:
-            points.unpersist()
-
-
-def _fit_kmeans_native_df(
-    points: DataFrame,
-    k: int,
-    dim: int,
-    seed: int = 42,
-    tol: float = DELTA_THRESHOLD,
-    max_iter: int = ITERATION_THRESHOLD,
-    initial_centroids: Centroids | None = None,
-    track_wssse: bool = False,
-    cache_input: bool = True,
-) -> KMeansResult:
-    """The pre-round-15 DataFrame-expression Lloyd loop, kept verbatim
-    as the equivalence reference for the numpy engine (tests pin both
-    to the same trajectory).  Same semantics, ~1s/iteration of driver
-    overhead (plan re-analysis + broadcast exchange + AQE re-planning
-    per iteration) the numpy engine removes.
-    """
-    # Assignment with centroids as a broadcast 1-row relation, not plan
-    # literals (assign_clusters_broadcast): the plan and generated code
-    # are IDENTICAL across iterations — only the broadcast data changes —
-    # so Spark's codegen cache hits from iteration 2 on.  Literal
-    # centroids re-analyzed and re-compiled a fresh k x d-literal plan
-    # every iteration (~1s/iter of driver time at d=64).
-    points = points.select("id", "features")
-    if cache_input:
-        points = points.cache()
-    try:
-        centroids = (
-            [list(c) for c in initial_centroids]
-            if initial_centroids is not None
-            else farthest_point_init(points, k, seed=seed)
-        )
-        delta = float("inf")
-        wssse_hist: list[float] = []
-        it = 0
-        while it < max_iter:
-            it += 1
-            assigned = assign_clusters_broadcast(points, centroids)
-            if track_wssse:
-                dists = _dist2_to_centroids("features", centroids)
-                row = assigned.agg(
-                    F.sum(F.array_min(dists)).alias("wssse"),
-                ).collect()[0]
-                wssse_hist.append(float(row["wssse"]))
-            # Recenter strategy by dimensionality.  Wide (one sum column
-            # per dimension) keeps rows 1:1 and is fastest while the agg
-            # stays narrow; posexplode + (cid, pos) trades a d-fold row
-            # fan-out for a d-independent plan — at d=64 the
-            # analysis/codegen of a 64-column agg dominated driver time.
-            # Either way the shuffle carries k x (d+1) partials per
-            # partition and k x (d+1) finals reach the driver — bytes
-            # independent of N (reference master.go:579-600 driver math).
-            new_centroids = [list(c) for c in centroids]  # empty keeps old
-            if dim <= 16:
-                row_aggs = [F.count("*").alias("cnt")] + [
-                    F.sum(F.col("features")[i]).alias(f"s{i}") for i in range(dim)
-                ]
-                for r in assigned.groupBy("cluster_id").agg(*row_aggs).collect():
-                    new_centroids[r["cluster_id"]] = [
-                        r[f"s{i}"] / r["cnt"] for i in range(dim)
-                    ]
-            else:
-                stats = (
-                    assigned.select(
-                        "cluster_id", F.posexplode("features").alias("pos", "x")
-                    )
-                    .groupBy("cluster_id", "pos")
-                    .agg(F.sum("x").alias("s"), F.count("*").alias("cnt"))
-                    .collect()
-                )
-                for r in stats:
-                    new_centroids[r["cluster_id"]][r["pos"]] = r["s"] / r["cnt"]
-            delta = compute_delta(centroids, new_centroids)
-            centroids = new_centroids
-            if delta < tol:
-                return KMeansResult(centroids, it, delta, True, wssse_hist)
-        return KMeansResult(centroids, it, delta, False, wssse_hist)
-    finally:
-        if cache_input:
             points.unpersist()
 
 

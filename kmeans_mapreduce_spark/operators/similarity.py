@@ -23,7 +23,14 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kmeans_mapreduce_spark.functions.distance import cosine_similarity, dot
+from kmeans_mapreduce_spark.functions.distance import (
+    argmin_sql,
+    centroid_dists_sql,
+    centroids_sql_literal,
+    cosine_similarity,
+    dot,
+    squared_euclidean,
+)
 
 
 def brute_force_topk(
@@ -235,37 +242,28 @@ def _probe_query_cells(
     n_probe: int,
     id_col: str,
     vec_col: str,
-) -> tuple[DataFrame, list]:
-    """(q, probed_cells): one (query_id, qv, cell) row per probed cell
-    per query, plus the distinct probed cell ids (one tiny collect over
-    the broadcast-sized query side) — THE probe-side derivation every
-    index-reading IVF probe shares, so the cell ranking and its
-    tie-order have exactly one definition."""
-    from kmeans_mapreduce_spark.operators.kmeans import _dist2_to_centroids
-
-    q = queries.select(
+) -> DataFrame:
+    """(query_id, qv, cell): one row per probed cell per query — THE
+    probe-side derivation every IVF probe shares, so the cell ranking
+    and its tie-order have exactly one definition: the ``n_probe``
+    nearest cells by (squared distance, cell id), from one SQL
+    expression over the centroid literal."""
+    dists = centroid_dists_sql("qv", centroids_sql_literal(centroids))
+    cells = (
+        f"transform(slice(array_sort(transform({dists}, "
+        f"(d, i) -> named_struct('d', d, 'i', i))), 1, {n_probe}), s -> s.i)"
+    )
+    return queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    qd = _dist2_to_centroids("qv", centroids)
-    cells = F.transform(
-        F.slice(
-            F.array_sort(
-                F.array(
-                    *[
-                        F.struct(qd[i].alias("d"), F.lit(i).alias("i"))
-                        for i in range(len(centroids))
-                    ]
-                )
-            ),
-            1,
-            n_probe,
-        ),
-        lambda s: s["i"],
-    )
-    q = q.withColumn("cell", F.explode(cells))
-    probed = sorted({r["cell"] for r in q.select("cell").distinct().collect()})
-    return q, probed
+    ).withColumn("cell", F.explode(F.expr(cells)))
+
+
+def _probed_cells(q: DataFrame) -> list:
+    """The distinct probed cell ids of `_probe_query_cells` rows (one
+    tiny collect over the broadcast-sized query side), for the probes
+    that prune an index read by cell."""
+    return sorted({r["cell"] for r in q.select("cell").distinct().collect()})
 
 
 def _score_probed_topk(q: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
@@ -303,9 +301,8 @@ def ivf_topk_from_index(
     """Probe a written IVF index: same result as ivf_topk, but the cell
     restriction is a PARTITION filter on the index layout, so only the
     probed cells' files are opened."""
-    q, probed_cells = _probe_query_cells(
-        queries, centroids, n_probe, id_col, vec_col
-    )
+    q = _probe_query_cells(queries, centroids, n_probe, id_col, vec_col)
+    probed_cells = _probed_cells(q)
     corpus = spark.read.parquet(index_path).where(F.col("cell").isin(probed_cells))
     return _score_probed_topk(q, corpus, k)
 
@@ -454,9 +451,8 @@ def ivf_topk_base_plus_delta(
                 f"or not written by compact_ivf_index) — pass "
                 f"watermark_batch explicitly"
             )
-    q, probed_cells = _probe_query_cells(
-        queries, centroids, n_probe, id_col, vec_col
-    )
+    q = _probe_query_cells(queries, centroids, n_probe, id_col, vec_col)
+    probed_cells = _probed_cells(q)
     base = (
         spark.read.parquet(base_dir)
         .where(F.col("cell").isin(probed_cells))
@@ -527,46 +523,9 @@ def ivf_topk(
     algorithm.  Join on cell id is an equi-join; at 100 TB the corpus
     side would be written bucketed-by-cell so probes prune partitions.
     """
-    from kmeans_mapreduce_spark.operators.kmeans import _dist2_to_centroids
-
     c_cell = assign_ivf_cells(corpus, centroids, id_col=id_col, vec_col=vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    qd = _dist2_to_centroids("qv", centroids)
-    # n_probe nearest cells per query: sort the (dist, idx) structs.
-    cells = F.transform(
-        F.slice(
-            F.array_sort(
-                F.array(
-                    *[
-                        F.struct(qd[i].alias("d"), F.lit(i).alias("i"))
-                        for i in range(len(centroids))
-                    ]
-                )
-            ),
-            1,
-            n_probe,
-        ),
-        lambda s: s["i"],
-    )
-    q = q.withColumn("cell", F.explode(cells))
-    pairs = (
-        F.broadcast(q)
-        .join(c_cell, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    q = _probe_query_cells(queries, centroids, n_probe, id_col, vec_col)
+    return _score_probed_topk(q, c_cell, k)
 
 
 def stream_append_ivf_index(
@@ -1007,11 +966,7 @@ def retire_compacted_batches(
 # One definition, used by the trainer, the encoder-side invariant
 # checks, and any distortion report — so a tie-break or layout change
 # cannot silently diverge between trainer and verifier.
-_PQ_D2S = (
-    "transform(element_at(_C, j + 1), c -> "
-    "aggregate(zip_with(features, c, (x, y) -> (x-y)*(x-y)), "
-    "0D, (s, v) -> s+v))"
-)
+_PQ_D2S = centroid_dists_sql("features", "element_at(_C, j + 1)")
 
 
 def pq_books_df(spark, books: list[list[list[float]]]) -> DataFrame:
@@ -1031,10 +986,7 @@ def pq_books_df(spark, books: list[list[list[float]]]) -> DataFrame:
 def pq_assign_expr() -> Column:
     """argmin code over this row's subspace codebook (ties -> lowest
     code, the fit_kmeans_native rule)."""
-    return F.expr(
-        f"element_at(transform(array({_PQ_D2S}), "
-        "ds -> cast(array_position(ds, array_min(ds)) - 1 as int)), 1)"
-    )
+    return F.expr(argmin_sql(_PQ_D2S))
 
 
 def pq_min_d2_expr() -> Column:
@@ -1180,29 +1132,17 @@ def _pq_codes_expr(vec_col: str, codebooks: list[list[list[float]]]) -> Column:
     indexes (ivf_pq_topk) can compute cell + codes in ONE corpus pass:
     per subspace, argmin over the codeword literals (first-min =
     lowest code id on ties, matching the SQL oracles' rn tiebreak)."""
-    m = len(codebooks)
     sub = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
-
-    def code(j: int):
-        s = F.slice(v, j * sub + 1, sub)
-        d2s = F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        s,
-                        F.array(*[F.lit(x) for x in cw]),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                for cw in codebooks[j]
-            ]
+    v = f"cast({vec_col} as array<double>)"
+    codes = ", ".join(
+        argmin_sql(
+            centroid_dists_sql(
+                f"slice({v}, {j * sub + 1}, {sub})", centroids_sql_literal(book)
+            )
         )
-        return (F.array_position(d2s, F.array_min(d2s)) - 1).cast("int")
-
-    return F.array(*[code(j) for j in range(m)])
+        for j, book in enumerate(codebooks)
+    )
+    return F.expr(f"array({codes})")
 
 
 def pq_topk(
@@ -1300,11 +1240,7 @@ def exact_rerank(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )
-    d2 = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = squared_euclidean("qv", "cv")
     w = Window.partitionBy("query_id").orderBy(
         F.asc("exact_d2"), F.asc("neighbor_id")
     )
@@ -1500,45 +1436,27 @@ def ivf_pq_index_parts(
     one place:
 
     - indexed[neighbor_id, cell, codes]: ONE corpus pass computing cell
-      + PQ codes as sibling map-side expressions; cell-assignment
-      strategy by the measured cutoff (<=8 cells: plan literals for
-      whole-stage codegen; above: the broadcast centroid relation a
-      sqrt(N) x d literal plan cannot replace — the PQ codes stay
-      literal either way, m x k_codes x (dim/m) is FIXED, not
-      N-dependent);
+      + PQ codes as sibling map-side expressions; cells by
+      `assign_clusters_auto` (<=8 cells: plan literals; above: the
+      broadcast centroid relation) — the PQ codes stay literal either
+      way, m x k_codes x (dim/m) is FIXED, not N-dependent;
     - qcells[query_id, cell, probe_rank]: each query's ``max_probe``
       nearest cells WITH their probe rank (driver math, ties to the
       lowest cell id — matching the corpus argmin and the SQL oracles);
     - lut[query_id, subspace, code, d2]: the per-query ADC tables
       (driver math, m x k_codes floats per query)."""
-    from kmeans_mapreduce_spark.operators.kmeans import _dist2_to_centroids
+    from kmeans_mapreduce_spark.operators.kmeans import assign_clusters_auto
 
     spark = corpus.sparkSession
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )
-    if len(centroids) <= 8:
-        dists = _dist2_to_centroids("cv", centroids)
-        indexed = cv.select(
-            "neighbor_id",
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias("cell"),
-            _pq_codes_expr("cv", codebooks).alias("codes"),
-        )
-    else:
-        from kmeans_mapreduce_spark.operators.kmeans import (
-            assign_clusters_broadcast,
-        )
-
-        indexed = assign_clusters_broadcast(
-            cv, centroids, features_col="cv"
-        ).select(
-            "neighbor_id",
-            F.col("cluster_id").cast("int").alias("cell"),
-            _pq_codes_expr("cv", codebooks).alias("codes"),
-        )
+    indexed = assign_clusters_auto(cv, centroids, features_col="cv").select(
+        "neighbor_id",
+        F.col("cluster_id").alias("cell"),
+        _pq_codes_expr("cv", codebooks).alias("codes"),
+    )
     qcell_rows, lut_rows = [], []
     sub = len(codebooks[0][0])
     for qid, qv in query_vectors:

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kmeans_mapreduce_spark.functions.distance import argmin_sql, centroid_dists_sql
 from kmeans_mapreduce_spark.operators.kmeans import (
     assign_clusters,
     compute_delta,
@@ -161,7 +162,7 @@ def km_avg_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = pts.select(F.col("id").alias("idb"), F.col("features").alias("vb"))
     from kmeans_mapreduce_spark.functions.distance import euclidean
 
-    dist = euclidean(F.col("va"), F.col("vb"))
+    dist = euclidean("va", "vb")
     return (
         a.crossJoin(b)
         .where(F.col("ida") != F.col("idb"))
@@ -250,7 +251,7 @@ def km_avg_point_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     others = pts.select(F.col("id").alias("idb"), F.col("features").alias("vb"))
     from kmeans_mapreduce_spark.functions.distance import euclidean
 
-    d = euclidean(F.col("va"), F.col("vb"))
+    d = euclidean("va", "vb")
     return (
         F.broadcast(probes)
         .crossJoin(others)
@@ -466,11 +467,7 @@ def kmeans_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # iteration-invariant integer argmin (codegen cached, centroids
         # ride broadcast DATA — the assign_clusters_broadcast economics)
-        assign_expr = F.expr(
-            "element_at(transform(array(transform(_C, c -> "
-            "aggregate(zip_with(v, c, (x, y) -> (x-y)*(x-y)), 0L, (s, t) -> s+t))), "
-            "ds -> cast(array_position(ds, array_min(ds)) - 1 as int)), 1)"
-        )
+        assign_expr = F.expr(argmin_sql(centroid_dists_sql("v", "_C", zero="0L")))
 
         def _assigned(c: list[list[int]]) -> DataFrame:
             cent_df = spark.createDataFrame([(c,)], cent_schema)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kmeans_mapreduce_spark.functions import text as TXT
+from kmeans_mapreduce_spark.functions.distance import centroid_dists_sql
 from kmeans_mapreduce_spark.plans.pipeline_queries import (
     _BLANK,
     _TOKS_ALL,
@@ -681,10 +682,7 @@ def embedding_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(8)
         ]
     )
-    d2min = F.expr(
-        "array_min(transform(element_at(_B, j + 1), c -> "
-        "aggregate(zip_with(s, c, (x, y) -> (x-y)*(x-y)), 0D, (acc, t) -> acc + t)))"
-    )
+    d2min = F.expr(f"array_min({centroid_dists_sql('s', 'element_at(_B, j + 1)')})")
     return (
         sub.withColumn("_B", books_lit)
         .select("j", d2min.alias("d2"))

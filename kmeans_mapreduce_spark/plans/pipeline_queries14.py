@@ -39,6 +39,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kmeans_mapreduce_spark.functions.distance import squared_euclidean
 from kmeans_mapreduce_spark.operators import multimodal as MM
 from kmeans_mapreduce_spark.plans.pipeline_queries import (
     _docs,
@@ -193,11 +194,7 @@ def _brute_topk(e: DataFrame, qdf: DataFrame) -> DataFrame:
     50-vector sample.  [query_id, neighbor_id, d2, rank]."""
     from pyspark.sql import Window
 
-    d2 = F.aggregate(
-        F.zip_with("qv", "v", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = squared_euclidean("qv", "v")
     w = Window.partitionBy("query_id").orderBy(
         F.asc("d2"), F.asc("neighbor_id")
     )
@@ -279,15 +276,7 @@ def ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("query_id")
             .agg(
                 F.count("*").alias("n_ret"),
-                F.sum(
-                    F.aggregate(
-                        F.zip_with(
-                            "qv", "nv", lambda a, b: (a - b) * (a - b)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                ).alias("s_approx"),
+                F.sum(squared_euclidean("qv", "nv")).alias("s_approx"),
             )
         )
         sb = (

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kmeans_mapreduce_spark.functions.distance import squared_euclidean
 from kmeans_mapreduce_spark.operators import multimodal as MM
 from kmeans_mapreduce_spark.plans.pipeline_queries import _docs, _ivf_d2_sql
 from kmeans_mapreduce_spark.plans.pipeline_queries14 import (
@@ -83,11 +84,7 @@ def ann_rerank_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         # TRUE distances for the widest shortlist, once — the
         # |Q| x max(levels) raw-vector sliver every level's re-rank
         # slices (same fold order / rounding as exact_rerank)
-        d2 = F.aggregate(
-            F.zip_with("qv", "nv", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        d2 = squared_euclidean("qv", "nv")
         ex = (
             widest.select("query_id", "neighbor_id", "rank")
             .join(

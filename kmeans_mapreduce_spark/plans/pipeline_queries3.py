@@ -55,17 +55,14 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison anywhere (contrast: dedup_embedding_cosine's oracle).
     Fixed centroids (first _SEM_K vectors) make the whole thing
     SQL-expressible, like ANN_IVF_SQL."""
-    from kmeans_mapreduce_spark.operators.kmeans import _dist2_to_centroids
+    from kmeans_mapreduce_spark.operators.kmeans import assign_clusters
     from kmeans_mapreduce_spark.plans.kmeans_queries import _fixed_centroids
 
     cents = _fixed_centroids(spark, sf_dir, k=_SEM_K)
     e = _embs(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    dists = _dist2_to_centroids("v", cents)
-    assigned = e.withColumn(
-        "cluster_id", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    )
+    assigned = assign_clusters(e, cents, features_col="v")
     a = assigned.select(
         "cluster_id", F.col("vec_id").alias("id_a"), F.col("v").alias("va")
     )
@@ -134,46 +131,22 @@ def _knn_cell_pairs(e: DataFrame, cents, k_neighbors: int) -> DataFrame:
     the dense int key.  At 100 TB the corpus is written bucketed-by-cell
     so the self-join is co-located (zero extra shuffle).
 
-    Cell assignment strategy by cell count: small (fixture-sized)
-    centroid sets inline as PLAN LITERALS — the whole assign + join +
-    score path stays one whole-stage-codegen pipeline; above the
-    literal cap they ride the broadcast centroid relation (a sqrt(N)
-    x d literal plan would blow up codegen).  Both produce
-    first-min/lowest-id assignments, but the cutoff is measured, not
-    style: on the identical 60k-edge build at the 100x stress point
-    the relation path's extra join node pushed the pair-scoring stage
-    out of codegen and ran 9.6x slower (964 s vs 101 s, same
-    output)."""
+    Cell assignment is `assign_clusters_auto`: small (fixture-sized)
+    centroid sets inline as PLAN LITERALS, so the whole assign + join +
+    score path stays one whole-stage-codegen pipeline; above its 8-cell
+    cap they ride the broadcast centroid relation.  Both produce
+    first-min/lowest-id assignments."""
     return rank_cell_pairs(assigned_cells(e, cents), k_neighbors)
 
 
 def assigned_cells(e: DataFrame, cents) -> DataFrame:
-    """[vec_id, v, cell]: each vector's nearest-centroid cell id —
-    strategy per the `_knn_cell_pairs` docstring (<=8 cells: plan
-    literals; above: broadcast centroid relation)."""
-    if len(cents) <= 8:
-        from kmeans_mapreduce_spark.operators.kmeans import (
-            _dist2_to_centroids,
-        )
+    """[vec_id, v, cell]: each vector's nearest-centroid cell id
+    (`assign_clusters_auto`: <=8 cells plan literals, above that a
+    broadcast centroid relation)."""
+    from kmeans_mapreduce_spark.operators.kmeans import assign_clusters_auto
 
-        dists = _dist2_to_centroids("v", cents)
-        return e.select(
-            "vec_id",
-            "v",
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias("cell"),
-        )
-    from kmeans_mapreduce_spark.operators.kmeans import (
-        assign_clusters_broadcast,
-    )
-
-    return assign_clusters_broadcast(
-        e.select("vec_id", F.col("v").alias("features")), cents
-    ).select(
-        "vec_id",
-        F.col("features").alias("v"),
-        F.col("cluster_id").alias("cell"),
+    return assign_clusters_auto(e, cents, features_col="v").select(
+        "vec_id", "v", F.col("cluster_id").alias("cell")
     )
 
 

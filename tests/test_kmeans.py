@@ -14,11 +14,19 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kmeans_mapreduce_spark.operators.kmeans import (
+    DELTA_THRESHOLD,
+    ITERATION_THRESHOLD,
+    Centroids,
+    KMeansResult,
+    _dist2_to_centroids,
     assign_clusters,
+    assign_clusters_broadcast,
     compute_delta,
     farthest_point_init,
     fit_kmeans_mllib,
@@ -75,6 +83,88 @@ def _farthest_point_init_df(
     return centroids
 
 
+def _fit_kmeans_native_df(
+    points: DataFrame,
+    k: int,
+    dim: int,
+    seed: int = 42,
+    tol: float = DELTA_THRESHOLD,
+    max_iter: int = ITERATION_THRESHOLD,
+    initial_centroids: Centroids | None = None,
+    track_wssse: bool = False,
+    cache_input: bool = True,
+) -> KMeansResult:
+    """The pre-round-15 DataFrame-expression Lloyd loop, kept verbatim
+    as the equivalence reference for the numpy engine (tests pin both
+    to the same trajectory).  Same semantics, ~1s/iteration of driver
+    overhead (plan re-analysis + broadcast exchange + AQE re-planning
+    per iteration) the numpy engine removes.
+    """
+    # Assignment with centroids as a broadcast 1-row relation, not plan
+    # literals (assign_clusters_broadcast): the plan and generated code
+    # are IDENTICAL across iterations — only the broadcast data changes —
+    # so Spark's codegen cache hits from iteration 2 on.  Literal
+    # centroids re-analyzed and re-compiled a fresh k x d-literal plan
+    # every iteration (~1s/iter of driver time at d=64).
+    points = points.select("id", "features")
+    if cache_input:
+        points = points.cache()
+    try:
+        centroids = (
+            [list(c) for c in initial_centroids]
+            if initial_centroids is not None
+            else farthest_point_init(points, k, seed=seed)
+        )
+        delta = float("inf")
+        wssse_hist: list[float] = []
+        it = 0
+        while it < max_iter:
+            it += 1
+            assigned = assign_clusters_broadcast(points, centroids)
+            if track_wssse:
+                dists = _dist2_to_centroids("features", centroids)
+                row = assigned.agg(
+                    F.sum(F.array_min(dists)).alias("wssse"),
+                ).collect()[0]
+                wssse_hist.append(float(row["wssse"]))
+            # Recenter strategy by dimensionality.  Wide (one sum column
+            # per dimension) keeps rows 1:1 and is fastest while the agg
+            # stays narrow; posexplode + (cid, pos) trades a d-fold row
+            # fan-out for a d-independent plan — at d=64 the
+            # analysis/codegen of a 64-column agg dominated driver time.
+            # Either way the shuffle carries k x (d+1) partials per
+            # partition and k x (d+1) finals reach the driver — bytes
+            # independent of N (reference master.go:579-600 driver math).
+            new_centroids = [list(c) for c in centroids]  # empty keeps old
+            if dim <= 16:
+                row_aggs = [F.count("*").alias("cnt")] + [
+                    F.sum(F.col("features")[i]).alias(f"s{i}") for i in range(dim)
+                ]
+                for r in assigned.groupBy("cluster_id").agg(*row_aggs).collect():
+                    new_centroids[r["cluster_id"]] = [
+                        r[f"s{i}"] / r["cnt"] for i in range(dim)
+                    ]
+            else:
+                stats = (
+                    assigned.select(
+                        "cluster_id", F.posexplode("features").alias("pos", "x")
+                    )
+                    .groupBy("cluster_id", "pos")
+                    .agg(F.sum("x").alias("s"), F.count("*").alias("cnt"))
+                    .collect()
+                )
+                for r in stats:
+                    new_centroids[r["cluster_id"]][r["pos"]] = r["s"] / r["cnt"]
+            delta = compute_delta(centroids, new_centroids)
+            centroids = new_centroids
+            if delta < tol:
+                return KMeansResult(centroids, it, delta, True, wssse_hist)
+        return KMeansResult(centroids, it, delta, False, wssse_hist)
+    finally:
+        if cache_input:
+            points.unpersist()
+
+
 @pytest.fixture(scope="module")
 def fitted(points):
     res = fit_kmeans_native(points, k=K, dim=DIM, seed=42, track_wssse=True)
@@ -94,8 +184,6 @@ def test_converged_within_limits(fitted):
 def test_assignment_is_nearest_centroid(points, fitted):
     """(a): no point is closer to a different centroid than its own."""
     assigned = assign_clusters(points, fitted.centroids)
-    from kmeans_mapreduce_spark.operators.kmeans import _dist2_to_centroids
-
     dists = _dist2_to_centroids("features", fitted.centroids)
     viol = assigned.where(
         F.array_min(dists) < dists[F.col("cluster_id")] - F.lit(1e-12)
@@ -160,7 +248,6 @@ def test_fit_beats_unoptimized_centroids(points, fitted):
     optimized.  (The fixture's `label` column carries no geometric
     structure — verified: within-label spread == global spread — so a
     label-agreement/ARI check would only measure noise.)"""
-    from kmeans_mapreduce_spark.operators.kmeans import _dist2_to_centroids
 
     def wssse(cents):
         dists = _dist2_to_centroids("features", cents)
@@ -178,7 +265,7 @@ def test_mllib_path(points):
     assert len(model.clusterCenters()) == K
 
 
-def test_numpy_engine_matches_dataframe_loop(points):
+def test_numpy_engine_matches_dataframe_loop(points, monkeypatch):
     """Round-15 optimization gate: the numpy-block Lloyd engine
     (fit_kmeans_native) follows the EXACT trajectory of the original
     DataFrame-expression loop (_fit_kmeans_native_df) — same iteration
@@ -190,8 +277,6 @@ def test_numpy_engine_matches_dataframe_loop(points):
     contract (per-dim distance accumulation, first-min tie-break,
     row-order cluster sums) the rewrite preserves."""
     import math
-
-    from kmeans_mapreduce_spark.operators.kmeans import _fit_kmeans_native_df
 
     init = [list(r["features"]) for r in points.orderBy("id").limit(3).collect()]
     a = fit_kmeans_native(
@@ -207,6 +292,70 @@ def test_numpy_engine_matches_dataframe_loop(points):
     assert len(a.wssse_history) == len(b.wssse_history)
     for wa, wb in zip(a.wssse_history, b.wssse_history):
         assert math.isclose(wa, wb, rel_tol=1e-9)
+
+    # NaN variant: one NaN coordinate makes its row's distances all NaN
+    # (it joins cluster 0) and then cluster 0's centroid, whose NaN
+    # distance the SQL argmin skips for every other row.  The numpy
+    # argmin must skip it too, on one block and on several.  The run
+    # cannot converge (delta is NaN), so it is capped.
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+
+    nan_pts = points.withColumn(
+        "features",
+        F.when(
+            F.col("id") == 57,
+            F.expr("transform(features, (x, i) -> IF(i = 5, double('NaN'), x))"),
+        ).otherwise(F.col("features")),
+    ).cache()
+    try:
+        ref = _fit_kmeans_native_df(
+            nan_pts, k=3, dim=DIM, initial_centroids=init, max_iter=4,
+            track_wssse=True,
+        )
+        assert math.isnan(ref.centroids[0][5])
+        for target in (K_mod._BLOCK_TARGET_BYTES, 64 * 1024):
+            monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", target)
+            fit = fit_kmeans_native(
+                nan_pts, k=3, dim=DIM, initial_centroids=init, max_iter=4,
+                track_wssse=True,
+            )
+            assert fit.iterations == ref.iterations == 4
+            assert not fit.converged and not ref.converged
+            assert math.isnan(fit.delta) and math.isnan(ref.delta)
+            assert np.array_equal(fit.centroids, ref.centroids, equal_nan=True)
+            assert np.isnan(fit.wssse_history).all()
+            assert np.isnan(ref.wssse_history).all()
+    finally:
+        nan_pts.unpersist()
+
+
+def test_nonfinite_centroids_assign_alike(spark):
+    """NaN and +-inf centroids give the same cluster ids through the
+    literal and broadcast assignments and the numpy `_block_stats`:
+    the centroid literal renders them as ``double('NaN')`` and
+    ``double('+-Infinity')``, and every argmin skips NaN distances
+    (an all-NaN row lands on cluster 0)."""
+    from kmeans_mapreduce_spark.operators.kmeans import _block_stats
+
+    nan, inf = float("nan"), float("inf")
+    rows = [[0.0, 0.0], [6.0, 6.0], [1.0, 1.0], [nan, 1.0]]
+    pts = spark.createDataFrame(
+        list(enumerate(rows)), "id long, features array<double>"
+    )
+    cases = [
+        ([[nan, 0.0], [5.0, 5.0]], [1, 1, 1, 0]),
+        ([[inf, 0.0], [5.0, 5.0]], [1, 1, 1, 0]),
+        ([[-inf, 0.0], [5.0, 5.0]], [1, 1, 1, 0]),
+        ([[0.0, 0.0], [nan, nan], [1.0, 1.0]], [0, 2, 2, 0]),
+        ([[inf, inf], [nan, 0.0], [-inf, 0.0]], [0, 0, 0, 0]),
+    ]
+    for cents, want in cases:
+        for assign in (assign_clusters, assign_clusters_broadcast):
+            got = assign(pts, cents).orderBy("id").collect()
+            assert [r["cluster_id"] for r in got] == want, (assign, cents)
+        C = np.asarray(cents)
+        counts = [_block_stats(np.asarray([r]), C, len(C), 2, False)[0] for r in rows]
+        assert [int(np.flatnonzero(c)[0]) for c in counts] == want, cents
 
 
 def test_seq_sum_rows_matches_cumsum_fold():
@@ -333,10 +482,7 @@ def test_skewed_input_is_recut_into_even_blocks(
     import numpy as np
 
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
-    from kmeans_mapreduce_spark.operators.kmeans import (
-        _features_blocks,
-        _fit_kmeans_native_df,
-    )
+    from kmeans_mapreduce_spark.operators.kmeans import _features_blocks
 
     if shape == "coalesced":
         df = points.coalesce(1)

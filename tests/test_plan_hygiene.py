@@ -1,5 +1,6 @@
 """Catalog-wide physical-plan hygiene: no accidental nested-loop joins,
-no accidental unpartitioned windows.
+no accidental unpartitioned windows — plus a source pin that every Spark
+distance fold and argmin comes from ``functions/distance.py``.
 
 Builds every catalog query's executed plan ONCE at sf0.001 (module
 fixture) and asserts
@@ -19,7 +20,9 @@ fixture) and asserts
 
 from __future__ import annotations
 
+import ast
 import re
+from pathlib import Path
 
 import pytest
 
@@ -184,3 +187,126 @@ def test_unpartitioned_window_allowlist_is_tight(catalog_plans):
         if not unpartitioned_window_specs(catalog_plans[name])
     ]
     assert not stale, f"allowlist entries no longer needed: {stale}"
+
+
+# --- one distance fold, one argmin ------------------------------------------
+
+PKG = Path(__file__).resolve().parent.parent / "kmeans_mapreduce_spark"
+
+# DuckDB oracle SQL, exempt by the name of the function or constant
+# that builds it: the explicit left-to-right (a[i]-b[i])*(a[i]-b[i])
+# sums that reproduce the Spark fold on the oracle side, and the
+# chi-square oracle's (o - e) * (o - e).
+DUCKDB_ORACLE_SQL = {
+    "_d2_sql",  # kmeans_queries, pipeline_queries3
+    "_ivf_d2_sql",
+    "_MOVE_SQL",
+    "_D2_TO_MEANS",
+    "_fit_fixed_sql",
+    "CHI2_SQL",
+}
+
+# (A-B)*(A-B) in SQL text, and array_position(ds, array_min(ds))
+_SQL_FOLD = re.compile(
+    r"\(\s*([^()\s*+-]+)\s*-\s*([^()\s*+-]+)\s*\)\s*\*\s*\(\s*\1\s*-\s*\2\s*\)"
+)
+_SQL_ARGMIN = re.compile(r"array_position\s*\(\s*(\w+)\s*,\s*array_min\s*\(\s*\1\s*\)")
+
+
+def _call_name(node) -> str:
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+
+
+def _is_sq_diff(node) -> bool:
+    """``(a - b) * (a - b)``"""
+    return (
+        isinstance(node, ast.BinOp)
+        and isinstance(node.op, ast.Mult)
+        and isinstance(node.left, ast.BinOp)
+        and isinstance(node.left.op, ast.Sub)
+        and ast.dump(node.left) == ast.dump(node.right)
+    )
+
+
+def _text(node) -> str:
+    """A string constant, or an f-string with ``{}`` for each field."""
+    if isinstance(node, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "{}" for v in node.values
+        )
+    return node.value
+
+
+def _distance_copies(source: str) -> list[str]:
+    """Each hand-written fold or argmin in a module's source, as
+    ``"line N: <form> in <owner>"``."""
+    found: list[str] = []
+
+    def visit(node, owner: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            owner = node.name
+        elif isinstance(node, ast.Assign):
+            names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            owner = names[0] if names else owner
+        if owner in DUCKDB_ORACLE_SQL:
+            return  # nor anything nested in it
+        where = f"line {getattr(node, 'lineno', '?')}:"
+        if isinstance(node, ast.JoinedStr) or (
+            isinstance(node, ast.Constant) and isinstance(node.value, str)
+        ):
+            text = _text(node)
+            if _SQL_FOLD.search(text) or _SQL_ARGMIN.search(text):
+                found.append(f"{where} SQL text in {owner}")
+            return  # an f-string's parts are covered by its rendering
+        if isinstance(node, ast.Call):
+            name = _call_name(node)
+            if name == "zip_with" and any(
+                isinstance(a, ast.Lambda) and _is_sq_diff(a.body) for a in node.args
+            ):
+                found.append(f"{where} zip_with lambda in {owner}")
+            if name == "array_position" and any(
+                isinstance(a, ast.Call) and _call_name(a) == "array_min"
+                for a in node.args
+            ):
+                found.append(f"{where} array_position(array_min) in {owner}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner)
+
+    visit(ast.parse(source), "<module>")
+    return found
+
+
+def test_one_distance_fold_and_argmin():
+    """Every Spark squared-distance fold and argmin in the package comes
+    from the SQL-text functions in ``functions/distance.py``: no
+    hand-written ``(x-y)*(x-y)`` in SQL text, no ``(a - b) * (a - b)``
+    lambda inside ``zip_with``, no ``array_position(..., array_min(...))``
+    anywhere else (DuckDB oracle SQL exempt by name)."""
+    home = PKG / "functions" / "distance.py"
+    copies = [
+        f"{path.relative_to(PKG.parent)} {hit}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path != home
+        for hit in _distance_copies(path.read_text())
+    ]
+    assert not copies, copies
+    # the functions' own module holds the forms the pin bans elsewhere
+    assert _distance_copies(home.read_text())
+
+
+def test_distance_pin_sees_each_form():
+    """Each banned form is caught, a dot product is not, and DuckDB
+    oracle SQL is exempt only under its listed name."""
+    forms = {
+        'E = "aggregate(zip_with(v, c, (x, y) -> (x-y)*(x-y)), 0D, (s, t) -> s+t)"': 1,
+        "E = F.zip_with('a', 'b', lambda p, q: (p - q) * (p - q))": 1,
+        "E = F.zip_with('a', 'b', lambda p, q: p * q)": 0,
+        'E = f"cast(array_position(ds, array_min(ds)) - {one} as int)"': 1,
+        "E = F.array_position(d, F.array_min(d))": 1,
+    }
+    for src, want in forms.items():
+        assert len(_distance_copies(src)) == want, src
+    oracle = "    return ' + '.join(f'({a}[{i}]-{b}[{i}])*({a}[{i}]-{b}[{i}])' for i in R)\n"
+    assert _distance_copies("def _d2_sql(a, b):\n" + oracle) == []
+    assert len(_distance_copies("def other(a, b):\n" + oracle)) == 1

@@ -3,11 +3,11 @@
 Usage: python tools/capture_plans.py <out_dir> <suffix> [query ...]
 
 Writes <out_dir>/<query>_<suffix>.txt for each headline query (or the
-explicit list given).  For the three iterative fit queries the catalog
-callable runs the loop eagerly and returns a LocalTableScan, so for
-those we additionally capture the PER-ITERATION plans (assignment +
-recenter aggregate) built exactly the way the fit loop builds them —
-that is the plan the optimization round actually changes.
+explicit list given; any catalog query name works).  The iterative fit
+queries run their loop eagerly and return a local result, so for
+``kmeans_fit_native`` and ``kmeans_fit_lineitem`` the tool captures the
+plan of the numpy engine's Arrow pack stage instead, and skips the
+fits' own frames.
 """
 
 from __future__ import annotations
@@ -62,60 +62,10 @@ def _fit_pack_plans(spark, sf_dir: str) -> dict[str, str]:
     return out
 
 
-def _fit_iteration_plans(spark, sf_dir: str) -> dict[str, str]:
-    """The per-iteration plans of the native Lloyd loop on the
-    embeddings corpus (kmeans_fit_native's hot path)."""
-    from pyspark.sql import functions as F
-
-    from kmeans_mapreduce_spark.operators.kmeans import (
-        assign_clusters_broadcast,
-    )
-    from kmeans_mapreduce_spark.sources.ingest import points_from_embeddings
-
-    pts = points_from_embeddings(spark, sf_dir, dim=64).select("id", "features")
-    init = [
-        list(r["features"])
-        for r in pts.where(F.col("id") < 4).orderBy("id").collect()
-    ]
-    assigned = assign_clusters_broadcast(pts, init)
-    agg = (
-        assigned.select("cluster_id", F.posexplode("features").alias("pos", "x"))
-        .groupBy("cluster_id", "pos")
-        .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-    )
-    return {
-        "kmeans_iter_assign": explain_str(assigned),
-        "kmeans_iter_recenter": explain_str(agg),
-    }
-
-
-def _lineitem_iteration_plans(spark, sf_dir: str) -> dict[str, str]:
-    """Per-iteration plans of the lineitem-featurized fit (d=4 wide agg)."""
-    from pyspark.sql import functions as F
-
-    from kmeans_mapreduce_spark.operators.kmeans import (
-        assign_clusters_broadcast,
-    )
-    from kmeans_mapreduce_spark.sources.ingest import points_from_columns
-
-    cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").withColumn(
-        "rid", F.col("l_orderkey") * 10 + F.col("l_linenumber")
-    )
-    pts = points_from_columns(li, cols, id_col="rid")
-    init = [list(r["features"]) for r in pts.orderBy("id").limit(4).collect()]
-    assigned = assign_clusters_broadcast(pts, init)
-    row_aggs = [F.count("*").alias("cnt")] + [
-        F.sum(F.col("features")[i]).alias(f"s{i}") for i in range(4)
-    ]
-    agg = assigned.groupBy("cluster_id").agg(*row_aggs)
-    return {"kmeans_li_iter_recenter": explain_str(agg)}
-
-
 def main() -> None:
     out_dir = Path(sys.argv[1])
     suffix = sys.argv[2]
-    only = [a for a in sys.argv[3:] if not a.startswith("--")] or None
+    only = sys.argv[3:] or None
     out_dir.mkdir(parents=True, exist_ok=True)
 
     from kmeans_mapreduce_spark.plans.catalog import QUERIES
@@ -126,27 +76,14 @@ def main() -> None:
     spark = get_spark("capture-plans")
     names = only or list(bench.HEADLINE)
     for name in names:
-        if name in ("kmeans_fit_native", "kmeans_fit_mllib"):
-            # iterative: catalog callable returns a local result; the
-            # hot plans are the per-iteration ones captured below
-            continue
-        if name == "kmeans_fit_lineitem":
-            continue
+        if name in ("kmeans_fit_native", "kmeans_fit_mllib", "kmeans_fit_lineitem"):
+            continue  # iterative: the callable returns a local result
         df = QUERIES[name](spark, SF_DIR)
         (out_dir / f"{name}_{suffix}.txt").write_text(explain_str(df))
         print(f"wrote {name}_{suffix}.txt", file=sys.stderr)
-    wanted = set(names)
     extra: dict[str, str] = {}
-    if "--legacy-df-loop" in sys.argv:
-        # pre-r15 engine: the hot path was a per-iteration SQL plan
-        # (r15 used this for its "before" captures; kept for reference)
-        if "kmeans_fit_native" in wanted:
-            extra.update(_fit_iteration_plans(spark, SF_DIR))
-        if "kmeans_fit_lineitem" in wanted:
-            extra.update(_lineitem_iteration_plans(spark, SF_DIR))
-    elif "kmeans_fit_native" in wanted or "kmeans_fit_lineitem" in wanted:
-        # r15+ numpy-block engine: the only SQL plan is the pack stage,
-        # so it is the before AND after capture from round 16 on
+    if {"kmeans_fit_native", "kmeans_fit_lineitem"} & set(names):
+        # numpy-block engine: the only SQL plan is the pack stage
         extra.update(_fit_pack_plans(spark, SF_DIR))
     for name, text in extra.items():
         (out_dir / f"{name}_{suffix}.txt").write_text(text)
