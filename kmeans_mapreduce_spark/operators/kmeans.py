@@ -5,10 +5,15 @@ worker.go).  The Spark-first re-expression:
 
   reference (Go MapReduce over RPC)             here (numpy blocks on Spark)
   -------------------------------------------   -------------------------------
-  getChunks partitioner (master.go:511-547)     _features_blocks: one block
-                                                layout from exact row counts
-  worker chunk cache (worker.go:54-60)          packed feature blocks,
-                                                persisted once
+  getChunks partitioner (master.go:511-547)     _block_count from the exact
+                                                row count; above one block,
+                                                _features_blocks lays out
+                                                blocks from exact counts
+  worker chunk cache (worker.go:54-60)          one block: none, one task
+                                                reads the Arrow batches
+                                                (_in_one_task); above one
+                                                block: packed feature
+                                                blocks, persisted once
   Map: classify (worker.go:288-304)             _block_stats: numpy distances
                                                 (_sq_dists) and SQL's argmin
                                                 (_argmin_rows) in 64k-row
@@ -25,10 +30,11 @@ worker.go).  The Spark-first re-expression:
                                                 cluster keeps its centroid
   computeDelta / stop rule (master.go:569-576,  mean centroid movement < 0.01
     :213-228, thresholds :55-56)                or 100 iterations
-  kMeanspp farthest-point init                  one pack; seeded first pick
-    (master.go:157-190, worker.go:38-129)       from its materializing job,
-                                                k-1 numpy farthest picks (in
-                                                one task for one block)
+  kMeanspp farthest-point init                  seeded first pick from one
+    (master.go:157-190, worker.go:38-129)       aggregate, then k-1 numpy
+                                                farthest picks: in one task
+                                                for one block, else one job
+                                                per pick over one pack
 
 Scale posture (the part the reference gets wrong at 100 TB):
   * memberships are NEVER collected — assignment stays a lazy column
@@ -104,14 +110,17 @@ def assign_clusters_broadcast(
     ships as broadcast data exactly like the reference ships centroids
     after round 0 (master.go:313-333).  Prefer this form whenever the
     input is cached — measured 5-10x faster than re-codegen'ing a
-    literal plan against an InMemoryRelation."""
-    from pyspark.sql import types as T
+    literal plan against an InMemoryRelation.
 
-    spark = points.sparkSession
-    cent_schema = T.StructType(
-        [T.StructField("_C", T.ArrayType(T.ArrayType(T.DoubleType())))]
-    )
-    cent_df = spark.createDataFrame([([list(c) for c in centroids],)], cent_schema)
+    The one-row ``_C`` relation is built from a ``pyarrow.Table``, which
+    Spark turns into a local relation that needs no job of its own (a
+    Python list would become a ``parallelize`` RDD, scanned by a job of
+    ``defaultParallelism`` tasks)."""
+    import pyarrow as pa
+
+    matrix = pa.list_(pa.list_(pa.float64()))
+    table = pa.table({"_C": pa.array([[list(c) for c in centroids]], type=matrix)})
+    cent_df = points.sparkSession.createDataFrame(table)
     assign = F.expr(argmin_sql(centroid_dists_sql(features_col, "_C")))
     return (
         points.crossJoin(F.broadcast(cent_df))
@@ -171,58 +180,60 @@ def farthest_point_init(
     D^2-sampling k-means++: first centroid random, then k-1 rounds of
     "farthest point from current centroid set" (worker.go:38-129).
 
-    Runs on the numpy block engine.  ``(id as long, xxhash64(id, seed),
-    features)`` is packed ONCE by the Arrow pack stage the fit uses and
-    persisted MEMORY_AND_DISK.  The job that materializes the pack also
-    returns each partition's row count, width and lowest-``(hash, id)``
-    row, which is the seeded first pick (unlike the reference's unseeded
-    rand.Intn, master.go:160) at no extra job.  The fit's layout rule
-    (`_block_count`) then decides:
+    Runs on the numpy block engine, over ``(id as long, xxhash64(id,
+    seed), features)``.  One aggregate (`_aggregate`, one Spark job)
+    returns the row count and the seeded first pick (unlike the
+    reference's unseeded rand.Intn, master.go:160): the row with the
+    lowest ``(hash, id)``, ties to the earlier row.  Its width and the
+    count feed the fit's layout rule (`_block_count`):
 
-    * one block: all k-1 picks run inside one task over the coalesced
-      pack, keeping ``md = fmin(md, d2(X, newest pick))`` per row — 2
-      Spark jobs in all;
-    * otherwise: one job per pick over the pack's partitions.  Each task
+    * one block: all k-1 picks run inside ONE task that reads the
+      input's Arrow batches itself (`_in_one_task`: no pack, no
+      persist), keeping ``md = fmin(md, d2(X, newest pick))`` per row —
+      2 Spark jobs in all;
+    * otherwise: the input is packed once by the Arrow pack stage the
+      fit uses and persisted MEMORY_AND_DISK, then one job per pick runs
+      over the pack's partitions (the first materializes it).  Each task
       returns its farthest row from the centroids so far (InitMap and
       InitCombine, worker.go:232-285), and the driver keeps the farthest
-      of those (InitReduce, worker.go:106-129) — k jobs in all.
+      of those (InitReduce, worker.go:106-129) — k jobs in all.  The pack
+      is released on return and on error.
 
     Squared distances are `_sq_dists`, the fold `_block_stats` uses.  The
     farthest row has the largest min distance, NaN counting as largest
     (``fmin`` skips NaN like ``array_min``; a descending sort puts NaN
     first), and ties break to the lowest id, so reruns are bit-identical.
-    An empty input raises ``ValueError``.  The pack is released on
-    return and on error.
+    An empty input raises ``ValueError``.
     """
     import numpy as np
     from pyspark import StorageLevel
 
-    pack = _arrow_pack(
+    ids, feats = F.col(id_col).cast("long").alias("i"), F.col(features_col).alias("x")
+    stats = _aggregate(
         points.select(
-            F.col(id_col).cast("long"),
-            F.xxhash64(F.col(id_col), F.lit(seed)),
-            features_col,
-        )
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+            ids,
+            feats,
+            F.xxhash64(F.col(id_col), F.lit(seed)).alias("h"),
+            # the row position breaks (hash, id) ties to the earlier row
+            F.monotonically_increasing_id().alias("pos"),
+        ),
+        n=F.count(F.lit(1)),
+        first=F.min_by("x", F.struct("h", "i", "pos")),
+    )
+    if not stats["n"]:
+        raise ValueError("farthest_point_init: the input points are empty")
+    first = [float(v) for v in stats["first"]]
+    centroids: Centroids = [first]
+    if k < 2:
+        return centroids
+    rows = points.select(ids, feats)
+    if _block_count(stats["n"], len(first)) == 1:
+        return centroids + _in_one_task(rows, lambda pieces: _init_picks(pieces, first, k - 1))
+    pack = _arrow_pack(rows).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        parts = pack.mapPartitions(_init_summary).collect()
-        total = sum(n for n, _, _ in parts)
-        if not total:
-            raise ValueError("farthest_point_init: the input points are empty")
-        dim = next(d for n, d, _ in parts if n)
-        first = min((c for _, _, c in parts if c is not None), key=lambda c: c[:2])
-        centroids: Centroids = [first[2]]
-        if k < 2:
-            return centroids
-        if _block_count(total, dim) == 1:
-            return centroids + (
-                pack.coalesce(1)
-                .mapPartitions(lambda rows: _init_picks(rows, centroids[0], k - 1))
-                .collect()[0]
-            )
         for _ in range(k - 1):
             C = np.asarray(centroids, dtype=np.float64)
-            cands = pack.mapPartitions(lambda rows: _init_candidate(rows, C)).collect()
+            cands = pack.mapPartitions(lambda pieces: _init_candidate(pieces, C)).collect()
             j = _farthest(np.array([c[0] for c in cands]), np.array([c[1] for c in cands]))
             centroids.append(cands[j][2])
         return centroids
@@ -230,39 +241,21 @@ def farthest_point_init(
         pack.unpersist()
 
 
-def _init_rows(rows):
-    """Stack one partition of the init pack into ``(ids, hashes, X)``,
-    in row order; None when it holds no rows."""
+def _init_rows(pieces):
+    """Stack ``(id int64s, feature float64s, rows)`` pieces (buffers of
+    the init pack, or `_batch_arrays`) into ``(ids, X)``, in row order;
+    None when they hold no rows."""
     import numpy as np
 
     parts = [
-        (
-            np.frombuffer(ib, dtype=np.int64),
-            np.frombuffer(hb, dtype=np.int64),
-            np.frombuffer(b, dtype=np.float64).reshape(int(m), -1),
-        )
-        for ib, hb, b, m in rows
+        (np.frombuffer(ib, dtype=np.int64), np.frombuffer(b, dtype=np.float64).reshape(int(m), -1))
+        for ib, b, m in pieces
         if m
     ]
     if not parts:
         return None
-    ids, h, mats = zip(*parts)
-    return np.concatenate(ids), np.concatenate(h), np.vstack(mats)
-
-
-def _init_summary(rows):
-    """One partition of the init pack -> ``(rows, width, first-pick
-    candidate)``, the candidate being ``(hash, id, features)`` of its
-    lowest-``(hash, id)`` row (None when the partition is empty)."""
-    import numpy as np
-
-    part = _init_rows(rows)
-    if part is None:
-        yield 0, 0, None
-        return
-    ids, h, X = part
-    j = np.lexsort((ids, h))[0]
-    yield len(ids), X.shape[1], (int(h[j]), int(ids[j]), X[j].tolist())
+    ids, mats = zip(*parts)
+    return np.concatenate(ids), np.vstack(mats)
 
 
 def _farthest(md, ids) -> int:
@@ -275,12 +268,12 @@ def _farthest(md, ids) -> int:
     return int(top[np.argmin(ids[top])])
 
 
-def _init_picks(rows, first, picks: int):
+def _init_picks(pieces, first, picks: int):
     """All ``picks`` farthest points after ``first`` in one task over
-    the whole (one-block) init pack.  Yields the list of picks."""
+    the whole (one-block) input.  Yields the list of picks."""
     import numpy as np
 
-    ids, _, X = _init_rows(rows)
+    ids, X = _init_rows(pieces)
     out, md, new = [], None, np.asarray([first], dtype=np.float64)
     for _ in range(picks):
         md = _min_d2(X, new, md)
@@ -290,12 +283,12 @@ def _init_picks(rows, first, picks: int):
     yield out
 
 
-def _init_candidate(rows, C):
+def _init_candidate(pieces, C):
     """One partition's farthest row from centroids ``C``, as ``(min
     distance, id, features)``."""
-    part = _init_rows(rows)
+    part = _init_rows(pieces)
     if part is not None:
-        ids, _, X = part
+        ids, X = part
         md = _min_d2(X, C)
         j = _farthest(md, ids)
         yield float(md[j]), int(ids[j]), X[j].tolist()
@@ -337,35 +330,71 @@ def _block_count(total: int, dim: int) -> int:
     return max(1, -(-(total * dim * 8) // _BLOCK_TARGET_BYTES))
 
 
+def _aggregate(df: DataFrame, **aggs: Column) -> dict:
+    """The values of the aggregate columns ``aggs`` over ``df``, by name,
+    from ONE Spark job at the input's own parallelism: they are observed
+    metrics of a no-op write, merged on the driver.  A DataFrame
+    ``agg``/``count`` costs two jobs under AQE (its shuffle stage and
+    its result stage)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    metrics = [c.alias(name) for name, c in aggs.items()]
+    df.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+def _batch_arrays(batch):
+    """One Arrow batch as a tuple of contiguous numpy arrays: the int64
+    values of each leading column, the float64 flattened values of the
+    last (array) column, then the batch's row count."""
+    import numpy as np
+
+    *scalars, col = batch.columns
+    ints = [np.ascontiguousarray(s.to_numpy(zero_copy_only=False), dtype=np.int64) for s in scalars]
+    flat = np.ascontiguousarray(col.flatten().to_numpy(zero_copy_only=False), dtype=np.float64)
+    return (*ints, flat, len(col))
+
+
 def _arrow_pack(df: DataFrame):
     """The Arrow pack stage: each Arrow batch of ``df`` becomes ONE
-    plain tuple (no per-row pickling) of the int64 bytes of each leading
-    column, the float64 bytes of the last (array) column's flattened
-    values, and the batch's row count.  Returns the RDD of tuples."""
-    import numpy as np
+    plain tuple (no per-row pickling) of the bytes of its
+    `_batch_arrays` and its row count.  Returns the RDD of tuples."""
     import pyarrow as pa
 
-    names = [f"c{i}" for i in range(len(df.columns) - 1)]
+    names = [f"c{i}" for i in range(len(df.columns) - 1)] + ["b"]
 
     def _pack(batches):
         for batch in batches:
-            *scalars, col = batch.columns
-            out = {
-                name: [np.ascontiguousarray(s.to_numpy(zero_copy_only=False), dtype=np.int64).tobytes()]
-                for name, s in zip(names, scalars)
-            }
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            out["b"] = [np.ascontiguousarray(flat, dtype=np.float64).tobytes()]
-            out["n"] = [len(col)]
+            *arrays, n = _batch_arrays(batch)
+            out = {name: [a.tobytes()] for name, a in zip(names, arrays)}
+            out["n"] = [n]
             yield pa.RecordBatch.from_pydict(out)
 
-    schema = ", ".join([f"{name} binary" for name in names] + ["b binary", "n long"])
+    schema = ", ".join([f"{name} binary" for name in names] + ["n long"])
     return df.mapInArrow(_pack, schema=schema).rdd.map(tuple)
 
 
+def _in_one_task(df: DataFrame, fn):
+    """The one value ``fn(pieces)`` yields, computed in ONE Python task
+    that reads the Arrow batches of ``df.coalesce(1)`` itself: no pack,
+    no persist, one Spark job.  ``pieces`` are the batches'
+    `_batch_arrays`, in row order; the value comes back pickled in one
+    binary cell."""
+    import pickle
+
+    import pyarrow as pa
+
+    def _run(batches):
+        out = next(fn(_batch_arrays(batch) for batch in batches))
+        yield pa.RecordBatch.from_pydict({"out": [pickle.dumps(out)]})
+
+    return pickle.loads(df.coalesce(1).mapInArrow(_run, "out binary").collect()[0]["out"])
+
+
 def _consolidate(rows, dim: int):
-    """``(bytes, n)`` pieces -> one (n x dim) float64 block, in row
-    order (nothing for no rows)."""
+    """``(float64s, n)`` pieces (bytes or arrays) -> one (n x dim)
+    float64 block, in row order (nothing for no rows)."""
     import numpy as np
 
     mats = [np.frombuffer(b, dtype=np.float64).reshape(int(n), dim) for b, n in rows]
@@ -624,12 +653,14 @@ def _update_centroids(centroids: Centroids, cnt, sums, k: int, dim: int) -> Cent
     return new
 
 
-def _lloyd_iterate(pass_fn, centroids: Centroids, k, dim, tol, max_iter, track_wssse):
+def _lloyd_iterate(
+    pass_fn, centroids: Centroids, k, dim, tol, max_iter, track_wssse, report_final
+) -> KMeansResult:
     """The Lloyd control loop (stop rule master.go:123-236), agnostic of
     where ``pass_fn(centroids, want_wssse)`` runs — one definition used
     by both the per-iteration distributed path and the in-task
-    single-block path.  Returns (centroids, iterations, delta,
-    converged, wssse_history)."""
+    single-block path.  ``report_final`` adds one more pass against the
+    final centroids for ``final_counts``/``final_sums``."""
     delta = float("inf")
     hist: list[float] = []
     it = 0
@@ -645,7 +676,12 @@ def _lloyd_iterate(pass_fn, centroids: Centroids, k, dim, tol, max_iter, track_w
         if delta < tol:
             converged = True
             break
-    return centroids, it, delta, converged, hist
+    res = KMeansResult(centroids, it, delta, converged, hist)
+    if report_final:
+        fcnt, fsums, _ = pass_fn(centroids, False)
+        res.final_counts = [int(x) for x in fcnt]
+        res.final_sums = [[float(v) for v in row] for row in fsums]
+    return res
 
 
 def _lloyd_pass(blocks, centroids, want_wssse: bool):
@@ -714,7 +750,7 @@ def _fit_single_block(rows, centroids0, k, dim, tol, max_iter, track_wssse, repo
     in-task computes the bit-identical trajectory of the per-iteration
     distributed path while paying ONE job instead of one per iteration.
     Shares `_block_stats` and `_lloyd_iterate` with the distributed
-    path, so the semantics cannot fork.  Yields one result dict."""
+    path, so the semantics cannot fork.  Yields one `KMeansResult`."""
     import numpy as np
 
     mats = [X for X in rows if X.size]
@@ -724,21 +760,9 @@ def _fit_single_block(rows, centroids0, k, dim, tol, max_iter, track_wssse, repo
         C = np.asarray(centroids, dtype=np.float64)
         return _block_stats(X, C, k, dim, want_wssse)
 
-    centroids, it, delta, converged, hist = _lloyd_iterate(
-        pass_fn, centroids0, k, dim, tol, max_iter, track_wssse
+    yield _lloyd_iterate(
+        pass_fn, centroids0, k, dim, tol, max_iter, track_wssse, report_final
     )
-    out = {
-        "centroids": centroids,
-        "iterations": it,
-        "delta": delta,
-        "converged": converged,
-        "hist": hist,
-    }
-    if report_final:
-        fcnt, fsums, _ = pass_fn(centroids, False)
-        out["final_counts"] = [int(x) for x in fcnt]
-        out["final_sums"] = [[float(v) for v in row] for row in fsums]
-    yield out
 
 
 def fit_kmeans_native(
@@ -765,76 +789,68 @@ def fit_kmeans_native(
     and coordinate sums the catalog reports need, without a separate
     DataFrame aggregation over the corpus.
 
-    Engine: the features are laid out once as numpy blocks
-    (`_features_blocks`: one layout decision, after the pack, from exact
-    per-partition row counts), and each iteration is one RDD job over
-    them: k x d centroids down, k x (d+1) partials per block up, bytes
-    independent of N, and the per-row distance math vectorized in numpy.
-    A single block runs the whole loop inside one task: one job for all
-    iterations.  Both shapes share `_block_stats` and `_lloyd_iterate`,
-    so they follow the same trajectory, which the tests pin bitwise to
-    a DataFrame-expression Lloyd loop (kept in the tests).  The cache
-    `_features_blocks` hands back is released in this function's
-    ``finally``, on success and on error.
+    Engine: one aggregate job counts the rows, and the layout rule
+    (`_block_count`) decides from that exact count, before any Python
+    runs.
+
+    * One block: ONE task reads the input's Arrow batches itself
+      (`_in_one_task`: no pack, no persist) and runs the whole loop, and
+      the final report, on them (`_fit_single_block`).  With explicit
+      centroids the fit is 2 Spark jobs.
+    * Otherwise the features are laid out once as numpy blocks
+      (`_features_blocks`: packed and persisted once, the layout decided
+      from exact per-partition row counts), and each iteration is one
+      RDD job over them: k x d centroids down, k x (d+1) partials per
+      block up, bytes independent of N, and the per-row distance math
+      vectorized in numpy.  The cache `_features_blocks` hands back is
+      released in this function's ``finally``, on success and on error.
+      A one-slot session lays this out as one block, and the loop runs
+      in one task over it, through the same `_fit_single_block`.
+
+    All shapes share `_block_stats` and `_lloyd_iterate`, so they follow
+    the same trajectory, which the tests pin bitwise to a
+    DataFrame-expression Lloyd loop (kept in the tests).
 
     Pass ``cache_input=False`` when the caller already manages a cache
-    that covers ``points`` (the numpy block cache is built either way;
-    the DataFrame cache only pays for itself when farthest-point init
-    runs, because the init pack and the block pack both read
-    ``points``).
+    that covers ``points``.  The DataFrame cache only pays for itself
+    when farthest-point init runs, because the count, the init's
+    aggregate and picks, and the fit each read ``points``.
     """
     points = points.select("id", "features")
-    # The DataFrame cache only pays when init runs: its pack and the
-    # block pack both read `points`, while the loop itself reads the
-    # numpy block cache.  Callers that pass explicit centroids skip it.
+    # Without init, the count and the fit (or the block pack) are the
+    # only reads of `points`; callers that pass explicit centroids skip
+    # the cache.
     df_cached = cache_input and initial_centroids is None
     if df_cached:
         points = points.cache()
     cache = None  # a failed pack still releases the df cache below
     try:
-        blocks, cache = _features_blocks(points, dim)
+        total = _aggregate(points.select(), n=F.count(F.lit(1)))["n"]
         centroids = (
             [list(c) for c in initial_centroids]
             if initial_centroids is not None
             else farthest_point_init(points, k, seed=seed)
         )
-        if blocks.getNumPartitions() == 1:
-            # Single block -> the whole loop is ONE task's sequential
-            # fold anyway; run it in-task (one job, not one per
-            # iteration).  Same `_block_stats`/`_lloyd_iterate` code,
-            # so the trajectory is bit-identical to the distributed
-            # path (merging one partial with exact zeros is identity).
-            out = blocks.mapPartitions(
-                lambda rows: _fit_single_block(
-                    rows, centroids, k, dim, tol, max_iter, track_wssse, report_final
-                )
-            ).collect()[0]
-            res = KMeansResult(
-                out["centroids"],
-                out["iterations"],
-                out["delta"],
-                out["converged"],
-                out["hist"],
+
+        def fused(blocks):
+            # the whole loop in one task; merging one block's partials
+            # with exact zeros is the identity, so the trajectory is
+            # bit-identical to the distributed path's
+            return _fit_single_block(
+                blocks, centroids, k, dim, tol, max_iter, track_wssse, report_final
             )
-            if report_final:
-                res.final_counts = out["final_counts"]
-                res.final_sums = out["final_sums"]
-            return res
-        centroids, it, delta, converged, wssse_hist = _lloyd_iterate(
+
+        if _block_count(total, dim) == 1:
+            return _in_one_task(
+                points.select("features"), lambda pieces: fused(_consolidate(pieces, dim))
+            )
+        blocks, cache = _features_blocks(points, dim)
+        if blocks.getNumPartitions() == 1:
+            return blocks.mapPartitions(fused).collect()[0]
+        return _lloyd_iterate(
             lambda c, w: _lloyd_pass(blocks, c, w),
-            centroids,
-            k,
-            dim,
-            tol,
-            max_iter,
-            track_wssse,
+            centroids, k, dim, tol, max_iter, track_wssse, report_final,
         )
-        res = KMeansResult(centroids, it, delta, converged, wssse_hist)
-        if report_final:
-            fcnt, fsums, _ = _lloyd_pass(blocks, centroids, False)
-            res.final_counts = [int(x) for x in fcnt]
-            res.final_sums = [[float(v) for v in row] for row in fsums]
-        return res
     finally:
         if cache is not None:
             cache.unpersist()

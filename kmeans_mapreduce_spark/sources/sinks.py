@@ -20,19 +20,26 @@ from pyspark.sql import functions as F
 def write_clusters_csv(assigned: DataFrame, path: str, mode: str = "overwrite") -> None:
     """assigned[id, features, cluster_id] -> path/cluster_id=<i>/*.csv.
 
-    Coordinates are exploded to one column per dimension (CSV has no
-    array type); scientific notation like the reference's FormatFloat
-    'E' (client.go:247) via format_string.
+    Each row is one line ``id,c0,c1,...``, the coordinates in scientific
+    notation like the reference's FormatFloat 'E' (client.go:247) via
+    format_string.  The line is built as ONE string column and written
+    by the CSV writer with a separator no line contains, so no value is
+    quoted and no job runs to learn the width.  A null id writes an
+    empty first field.  A row whose features array is null writes its
+    id alone (the per-coordinate writer this replaced wrote one ``NULL``
+    per coordinate).
     """
-    dim = len(assigned.select("features").head()["features"])
-    cols = [F.col("id")] + [
-        F.format_string("%E", F.col("features")[i]).alias(f"c{i}") for i in range(dim)
-    ]
+    line = F.concat_ws(
+        ",",
+        F.coalesce(F.col("id").cast("string"), F.lit("")),
+        F.transform("features", lambda x: F.format_string("%E", x)),
+    )
     (
-        assigned.select(F.col("cluster_id"), *cols)
+        assigned.select("cluster_id", line.alias("line"))
         .write.mode(mode)
         .partitionBy("cluster_id")
         .option("header", False)
+        .option("sep", "\u0001")
         .csv(path)
     )
 

@@ -67,6 +67,63 @@ def test_cluster_csv_sink(spark, tmp_path, points):
     assert back.count() == points.count()
 
 
+def _write_clusters_csv_per_column(assigned, path: str) -> None:
+    """The per-coordinate cluster CSV writer `write_clusters_csv`
+    replaced, kept unchanged as its byte reference: a job to learn the
+    width, then one format_string column per coordinate."""
+    dim = len(assigned.select("features").head()["features"])
+    cols = [F.col("id")] + [
+        F.format_string("%E", F.col("features")[i]).alias(f"c{i}") for i in range(dim)
+    ]
+    (
+        assigned.select(F.col("cluster_id"), *cols)
+        .write.mode("overwrite")
+        .partitionBy("cluster_id")
+        .option("header", False)
+        .csv(path)
+    )
+
+
+def _sink_files(path: str) -> dict:
+    """{(cluster dir, part number, file suffix): bytes} of a sink."""
+    out = {}
+    for f in glob.glob(f"{path}/cluster_id=*/part-*"):
+        d, name = f.split("/")[-2:]
+        part, _, rest = name[len("part-"):].partition("-")
+        out[(d, part, rest.partition(".")[2])] = open(f, "rb").read()
+    return out
+
+
+def test_cluster_csv_sink_bytes_match_per_column_writer(spark, tmp_path):
+    """One line column writes the same files, byte for byte, as the
+    per-coordinate writer it replaced: NaN, +-inf, -0.0, negative and
+    tiny values, a null coordinate and a null id.  A null features
+    array is the one difference, and it is pinned: the id alone, where
+    the old writer wrote one NULL per coordinate."""
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (1, [1.5, -2.5e-300, 0.0], 0),
+        (2, [nan, -0.0, -7.25], 1),
+        (3, [-inf, inf, 1e300], 0),
+        (None, [1.0, 2.0, -3.0], 2),
+        (5, [None, 3.0, 4.0], 1),
+        (-6, [-1.0, -1e-5, 123456789.0], 2),
+    ]
+    df = spark.createDataFrame(rows, "id long, features array<double>, cluster_id int")
+    df = df.repartition(2, "id")
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    _write_clusters_csv_per_column(df, old)
+    write_clusters_csv(df, new)
+    want, got = _sink_files(old), _sink_files(new)
+    assert got == want
+    assert sorted({d for d, _, _ in got}) == ["cluster_id=0", "cluster_id=1", "cluster_id=2"]
+    assert {suffix for _, _, suffix in got} == {"c000.csv"}
+
+    null = spark.createDataFrame([(7, None, 0)], "id long, features array<double>, cluster_id int")
+    write_clusters_csv(null, str(tmp_path / "null"))
+    assert list(_sink_files(str(tmp_path / "null")).values()) == [b"7\n"]
+
+
 def test_cluster_size_report(points):
     from kmeans_mapreduce_spark.operators.kmeans import assign_clusters, farthest_point_init
 

@@ -358,6 +358,16 @@ def test_nonfinite_centroids_assign_alike(spark):
         assert [int(np.flatnonzero(c)[0]) for c in counts] == want, cents
 
 
+def test_broadcast_centroids_are_a_local_relation(points):
+    """`assign_clusters_broadcast` ships the centroids as a one-row
+    local relation: no RDD scan (and no job of its own) for ``_C``."""
+    cents = [list(r["features"]) for r in points.orderBy("id").limit(3).collect()]
+    plan = assign_clusters_broadcast(points, cents)._jdf.queryExecution().optimizedPlan()
+    text = plan.toString()
+    assert "LocalRelation [_C#" in text, text
+    assert "LogicalRDD" not in text, text
+
+
 def test_seq_sum_rows_matches_cumsum_fold():
     """r15 opt gate: `_seq_sum_rows` (np.sum over axis 0 for d > 1,
     cumsum fallback for d == 1) is bit-identical to the sequential
@@ -451,6 +461,48 @@ def test_multi_block_engine_matches_single_block(points, monkeypatch):
     assert len(multi.wssse_history) == len(single.wssse_history)
     for wa, wb in zip(multi.wssse_history, single.wssse_history):
         assert math.isclose(wa, wb, rel_tol=1e-9)
+
+
+def test_one_block_fit_is_one_task_with_no_persist(points, monkeypatch):
+    """A one-block fit from explicit centroids runs 2 Spark jobs: the
+    row count, and ONE task that reads the input's Arrow batches and
+    runs the whole loop.  It persists nothing: no pack, no blocks."""
+    from pyspark import RDD
+
+    def no_persist(*_):
+        raise AssertionError("a one-block fit persists nothing")
+
+    init = [list(r["features"]) for r in points.orderBy("id").limit(3).collect()]
+    monkeypatch.setattr(RDD, "persist", no_persist)
+    sc = points.sparkSession.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    persisted = sc._jsc.getPersistentRDDs().size()
+    res = fit_kmeans_native(points, k=3, dim=DIM, initial_centroids=init, report_final=True)
+    jobs = sorted(set(tracker.getJobIdsForGroup()) - before)
+    assert len(jobs) == 2, jobs
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+    # tasks that ran (the cached input's lineage lists skipped stages)
+    stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(jobs[-1]).stageIds]
+    assert sum(s.numCompletedTasks for s in stages) == 1
+    assert sum(res.final_counts) == points.count()
+
+
+def test_one_block_fit_with_init_matches_multi_block(points, monkeypatch):
+    """A one-block fit that runs farthest-point init itself (both in one
+    task each) gives bit-identical centroids to the same call forced
+    multi-block by a 64 KiB block target (init then runs one job per
+    pick over a pack, and the loop one job per pass)."""
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+
+    one = fit_kmeans_native(points, k=4, dim=DIM, seed=7, report_final=True)
+    monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
+    multi = fit_kmeans_native(points, k=4, dim=DIM, seed=7, report_final=True)
+    assert _bits(one.centroids) == _bits(multi.centroids)
+    assert one.iterations == multi.iterations
+    assert one.converged == multi.converged
+    assert one.delta == multi.delta
+    assert one.final_counts == multi.final_counts
 
 
 def _block_rows(blocks):
