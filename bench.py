@@ -117,7 +117,6 @@ def main() -> None:
         dim=16,
         initial_centroids=[[float((r + i) % 97) for i in range(16)] for r in range(4)],
         max_iter=3,
-        cache_input=False,
     )
     warm.unpersist()
     # miniature SYNTHETIC replicas of the heavy operator shapes (dedup

@@ -130,7 +130,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 max_iter=args.max_iter
                 if args.max_iter is not None
                 else ITERATION_THRESHOLD,
-                cache_input=False,
             )
             assigned = assign_clusters_broadcast(pts, res.centroids)
             centroids = res.centroids

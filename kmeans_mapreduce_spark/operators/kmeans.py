@@ -9,11 +9,14 @@ worker.go).  The Spark-first re-expression:
                                                 row count; above one block,
                                                 _features_blocks lays out
                                                 blocks from exact counts
-  worker chunk cache (worker.go:54-60)          one block: none, one task
-                                                reads the Arrow batches
+  worker chunk cache (worker.go:54-60)          one read of the input per
+                                                fit, shared by the picks
+                                                and the passes.  One block:
+                                                none, one task reads the
+                                                Arrow batches
                                                 (_in_one_task); above one
-                                                block: packed feature
-                                                blocks, persisted once
+                                                block: one pack, persisted
+                                                once (_arrow_pack)
   Map: classify (worker.go:288-304)             _block_stats: numpy distances
                                                 (_sq_dists) and SQL's argmin
                                                 (_argmin_rows) in 64k-row
@@ -30,11 +33,13 @@ worker.go).  The Spark-first re-expression:
                                                 cluster keeps its centroid
   computeDelta / stop rule (master.go:569-576,  mean centroid movement < 0.01
     :213-228, thresholds :55-56)                or 100 iterations
-  kMeanspp farthest-point init                  seeded first pick from one
-    (master.go:157-190, worker.go:38-129)       aggregate, then k-1 numpy
-                                                farthest picks: in one task
-                                                for one block, else one job
-                                                per pick over one pack
+  kMeanspp farthest-point init                  seeded first pick and row
+    (master.go:157-190, worker.go:38-129)       count from one aggregate,
+                                                then k-1 numpy farthest
+                                                picks: in the fit's one
+                                                task for one block, else
+                                                one job per pick over the
+                                                fit's pack
 
 Scale posture (the part the reference gets wrong at 100 TB):
   * memberships are NEVER collected — assignment stays a lazy column
@@ -180,24 +185,24 @@ def farthest_point_init(
     D^2-sampling k-means++: first centroid random, then k-1 rounds of
     "farthest point from current centroid set" (worker.go:38-129).
 
-    Runs on the numpy block engine, over ``(id as long, xxhash64(id,
-    seed), features)``.  One aggregate (`_aggregate`, one Spark job)
-    returns the row count and the seeded first pick (unlike the
-    reference's unseeded rand.Intn, master.go:160): the row with the
-    lowest ``(hash, id)``, ties to the earlier row.  Its width and the
-    count feed the fit's layout rule (`_block_count`):
+    Runs on the numpy block engine, over ``(id as long, features)``.
+    One aggregate (`_seeded_first`, one Spark job) returns the row count
+    and the seeded first pick (unlike the reference's unseeded
+    rand.Intn, master.go:160).  Its width and the count feed the fit's
+    layout rule (`_block_count`):
 
     * one block: all k-1 picks run inside ONE task that reads the
       input's Arrow batches itself (`_in_one_task`: no pack, no
-      persist), keeping ``md = fmin(md, d2(X, newest pick))`` per row —
-      2 Spark jobs in all;
-    * otherwise: the input is packed once by the Arrow pack stage the
-      fit uses and persisted MEMORY_AND_DISK, then one job per pick runs
-      over the pack's partitions (the first materializes it).  Each task
-      returns its farthest row from the centroids so far (InitMap and
-      InitCombine, worker.go:232-285), and the driver keeps the farthest
-      of those (InitReduce, worker.go:106-129) — k jobs in all.  The pack
-      is released on return and on error.
+      persist), keeping ``md = fmin(md, d2(X, newest pick))`` per row
+      (`_init_picks`) — 2 Spark jobs in all;
+    * otherwise: the input is packed once (`_arrow_pack`) and one job
+      per pick runs over the pack's partitions (`_pack_picks`; the
+      first materializes it) — k jobs in all.  The pack is released on
+      return and on error.
+
+    A fit that runs its own init (`fit_kmeans_native` without
+    ``initial_centroids``) shares the aggregate, the one-block picks and
+    the pick jobs, over the read of the input its Lloyd loop then uses.
 
     Squared distances are `_sq_dists`, the fold `_block_stats` uses.  The
     farthest row has the largest min distance, NaN counting as largest
@@ -205,9 +210,27 @@ def farthest_point_init(
     first), and ties break to the lowest id, so reruns are bit-identical.
     An empty input raises ``ValueError``.
     """
-    import numpy as np
-    from pyspark import StorageLevel
+    rows, total, first = _seeded_first(points, seed, features_col, id_col)
+    if k < 2:
+        return [first]
+    dim = len(first)
+    if _block_count(total, dim) == 1:
+        return [first] + _in_one_task(
+            rows, lambda pieces: _init_picks(*_consolidate(pieces, dim), first, k - 1)
+        )
+    pack = _arrow_pack(rows)
+    try:
+        return _pack_picks(pack, first, k)[0]
+    finally:
+        pack.unpersist()
 
+
+def _seeded_first(points: DataFrame, seed: int, features_col="features", id_col="id"):
+    """``(rows, n, first)``: the points as ``(id as long, features)``
+    rows, their count and the seeded first farthest-point pick, from ONE
+    `_aggregate`.  The first pick is the row with the lowest
+    ``(xxhash64(id, seed), id)``, ties to the earlier row.  An empty
+    input raises ``ValueError``."""
     ids, feats = F.col(id_col).cast("long").alias("i"), F.col(features_col).alias("x")
     stats = _aggregate(
         points.select(
@@ -222,40 +245,7 @@ def farthest_point_init(
     )
     if not stats["n"]:
         raise ValueError("farthest_point_init: the input points are empty")
-    first = [float(v) for v in stats["first"]]
-    centroids: Centroids = [first]
-    if k < 2:
-        return centroids
-    rows = points.select(ids, feats)
-    if _block_count(stats["n"], len(first)) == 1:
-        return centroids + _in_one_task(rows, lambda pieces: _init_picks(pieces, first, k - 1))
-    pack = _arrow_pack(rows).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        for _ in range(k - 1):
-            C = np.asarray(centroids, dtype=np.float64)
-            cands = pack.mapPartitions(lambda pieces: _init_candidate(pieces, C)).collect()
-            j = _farthest(np.array([c[0] for c in cands]), np.array([c[1] for c in cands]))
-            centroids.append(cands[j][2])
-        return centroids
-    finally:
-        pack.unpersist()
-
-
-def _init_rows(pieces):
-    """Stack ``(id int64s, feature float64s, rows)`` pieces (buffers of
-    the init pack, or `_batch_arrays`) into ``(ids, X)``, in row order;
-    None when they hold no rows."""
-    import numpy as np
-
-    parts = [
-        (np.frombuffer(ib, dtype=np.int64), np.frombuffer(b, dtype=np.float64).reshape(int(m), -1))
-        for ib, b, m in pieces
-        if m
-    ]
-    if not parts:
-        return None
-    ids, mats = zip(*parts)
-    return np.concatenate(ids), np.vstack(mats)
+    return points.select(ids, feats), stats["n"], [float(v) for v in stats["first"]]
 
 
 def _farthest(md, ids) -> int:
@@ -268,30 +258,51 @@ def _farthest(md, ids) -> int:
     return int(top[np.argmin(ids[top])])
 
 
-def _init_picks(pieces, first, picks: int):
-    """All ``picks`` farthest points after ``first`` in one task over
-    the whole (one-block) input.  Yields the list of picks."""
+def _init_picks(ids, X, first, picks: int):
+    """The ``picks`` farthest points after ``first`` among the rows
+    ``X`` (ids ``ids``) of the whole (one-block) input, in one task."""
     import numpy as np
 
-    ids, X = _init_rows(pieces)
     out, md, new = [], None, np.asarray([first], dtype=np.float64)
     for _ in range(picks):
         md = _min_d2(X, new, md)
         j = _farthest(md, ids)
         out.append(X[j].tolist())
         new = X[j : j + 1]
-    yield out
+    return out
+
+
+def _pack_picks(pack, first, k: int):
+    """``(centroids, ns)``: ``first`` and the k-1 farthest picks after
+    it, one job per pick over the partitions of ``pack`` (an
+    `_arrow_pack` of ``(id, features)``), and each partition's row count
+    from the first of those jobs (None when k < 2).  Each task returns
+    its farthest row from the centroids so far (InitMap and
+    InitCombine, worker.go:232-285), and the driver keeps the farthest
+    of those (InitReduce, worker.go:106-129)."""
+    import numpy as np
+
+    centroids, ns = [first], None
+    for _ in range(k - 1):
+        C = np.asarray(centroids, dtype=np.float64)
+        out = pack.mapPartitions(lambda pieces: _init_candidate(pieces, C)).collect()
+        ns = ns or [n for n, _ in out]
+        cands = [c for _, c in out if c is not None]
+        j = _farthest(np.array([c[0] for c in cands]), np.array([c[1] for c in cands]))
+        centroids.append(cands[j][2])
+    return centroids, ns
 
 
 def _init_candidate(pieces, C):
-    """One partition's farthest row from centroids ``C``, as ``(min
-    distance, id, features)``."""
-    part = _init_rows(pieces)
-    if part is not None:
-        ids, X = part
-        md = _min_d2(X, C)
-        j = _farthest(md, ids)
-        yield float(md[j]), int(ids[j]), X[j].tolist()
+    """One partition's row count, and its farthest row from centroids
+    ``C`` as ``(min distance, id, features)`` (None for no rows)."""
+    part = _consolidate(pieces, C.shape[1])
+    if part is None:
+        return [(0, None)]
+    ids, X = part
+    md = _min_d2(X, C)
+    j = _farthest(md, ids)
+    return [(len(ids), (float(md[j]), int(ids[j]), X[j].tolist()))]
 
 
 @dataclass
@@ -359,8 +370,17 @@ def _batch_arrays(batch):
 def _arrow_pack(df: DataFrame):
     """The Arrow pack stage: each Arrow batch of ``df`` becomes ONE
     plain tuple (no per-row pickling) of the bytes of its
-    `_batch_arrays` and its row count.  Returns the RDD of tuples."""
+    `_batch_arrays` and its row count.  Returns the RDD of tuples,
+    persisted MEMORY_AND_DISK (PySpark's MEMORY_ONLY default would
+    re-run the scan and the pack for evicted partitions on every read);
+    the caller unpersists it.
+
+    The ``.rdd.map(tuple)`` bridge costs each pack task a second Python
+    worker, but the bare ``.rdd`` caches pickled ``Row`` objects, which
+    are larger and slower to read on every Lloyd pass (BASELINE.md,
+    "Dead ends")."""
     import pyarrow as pa
+    from pyspark import StorageLevel
 
     names = [f"c{i}" for i in range(len(df.columns) - 1)] + ["b"]
 
@@ -372,11 +392,12 @@ def _arrow_pack(df: DataFrame):
             yield pa.RecordBatch.from_pydict(out)
 
     schema = ", ".join([f"{name} binary" for name in names] + ["n long"])
-    return df.mapInArrow(_pack, schema=schema).rdd.map(tuple)
+    pack = df.mapInArrow(_pack, schema=schema).rdd.map(tuple)
+    return pack.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _in_one_task(df: DataFrame, fn):
-    """The one value ``fn(pieces)`` yields, computed in ONE Python task
+    """The value ``fn(pieces)`` returns, computed in ONE Python task
     that reads the Arrow batches of ``df.coalesce(1)`` itself: no pack,
     no persist, one Spark job.  ``pieces`` are the batches'
     `_batch_arrays`, in row order; the value comes back pickled in one
@@ -386,22 +407,35 @@ def _in_one_task(df: DataFrame, fn):
     import pyarrow as pa
 
     def _run(batches):
-        out = next(fn(_batch_arrays(batch) for batch in batches))
+        out = fn(_batch_arrays(batch) for batch in batches)
         yield pa.RecordBatch.from_pydict({"out": [pickle.dumps(out)]})
 
     return pickle.loads(df.coalesce(1).mapInArrow(_run, "out binary").collect()[0]["out"])
 
 
-def _consolidate(rows, dim: int):
-    """``(float64s, n)`` pieces (bytes or arrays) -> one (n x dim)
-    float64 block, in row order (nothing for no rows)."""
+def _consolidate(pieces, dim: int):
+    """``(*int64s, float64s, n)`` pieces (buffers of an `_arrow_pack`,
+    or `_batch_arrays`) -> ``(*int64 arrays, (n x dim) float64
+    matrix)`` of all their rows, in row order; None when they hold no
+    rows.  The one stacker of the init, the fit and the re-cut."""
     import numpy as np
 
-    mats = [np.frombuffer(b, dtype=np.float64).reshape(int(n), dim) for b, n in rows]
-    mats = [m for m in mats if m.size]
-    if mats:
-        # vstack keeps row order: same fold as iterating the batches
-        yield mats[0] if len(mats) == 1 else np.vstack(mats)
+    pieces = [p for p in pieces if p[-1]]
+    if not pieces:
+        return None
+    *ints, feats, ns = zip(*pieces)
+    cols = [[np.frombuffer(b, dtype=np.int64) for b in col] for col in ints]
+    cols.append([np.frombuffer(b, np.float64).reshape(int(n), dim) for b, n in zip(feats, ns)])
+    # one piece is used as it is; concatenate keeps row order, the same
+    # fold as iterating the batches
+    return tuple(c[0] if len(c) == 1 else np.concatenate(c) for c in cols)
+
+
+def _block(pieces, dim: int):
+    """The feature matrix of ``pieces`` (`_consolidate`) as a block: a
+    list of at most one matrix, the ids dropped."""
+    part = _consolidate(pieces, dim)
+    return [part[-1]] if part else []
 
 
 def _regroup(items, dim: int):
@@ -409,30 +443,32 @@ def _regroup(items, dim: int):
     pieces, sorted by global row offset: its contents do not depend on
     the order the shuffle fetched them in."""
     pieces = sorted((v for _, v in items), key=lambda v: v[0])
-    return _consolidate(((b, n) for _, b, n in pieces), dim)
+    return _block(((b, n) for _, b, n in pieces), dim)
 
 
-def _features_blocks(points: DataFrame, dim: int, features_col: str = "features"):
-    """Lay the points' feature vectors out as numpy blocks, one
-    (n_i x dim) float64 matrix per partition, and return
-    ``(blocks, cache)``: the caller unpersists ``cache`` after the fit.
+def _features_blocks(points, dim: int, ns=None):
+    """Lay the points' feature vectors out as numpy blocks, at most one
+    (n_i x dim) float64 matrix per partition, and return ``(blocks,
+    cache)``: the caller unpersists ``cache`` after the fit.
 
-    The features are packed ONCE, at the input's native parallelism:
-    an Arrow stage turns each batch's list column into one contiguous
-    float64 buffer (no per-row pickling), persisted MEMORY_AND_DISK as
-    plain ``(bytes, n)`` tuples (no Row rebuilt on each read of the
-    cache).  The job that materializes the pack
-    also returns each partition's exact row count, and the layout is
-    decided once, from those counts.  With ``want`` blocks of about
+    ``points`` is a DataFrame, whose ``features`` are packed here, or an
+    `_arrow_pack` the caller made, whose leading id columns the blocks
+    drop; then ``ns``, when given, are its per-partition row counts.
+
+    The features are packed ONCE, at the input's native parallelism
+    (`_arrow_pack`: one contiguous float64 buffer per Arrow batch,
+    persisted as plain tuples).  The layout is decided once, from each
+    partition's exact row count: ``ns``, or else one job that counts the
+    pack's rows and materializes it.  With ``want`` blocks of about
     ``_BLOCK_TARGET_BYTES``, the input is skewed iff ``want > 1`` and
     its largest partition holds at least twice the fair share of
     ``min(want, slots)`` tasks: a one-partition input above one block,
     or a file whose single row group lands every row in one split.
 
     * Skewed: the packed rows are re-cut into ``want`` contiguous global
-      row ranges (one shuffle of the packed bytes; each block is sorted
-      by global row offset, so its contents do not depend on fetch
-      order), the blocks are persisted and the pack is released.
+      row ranges (one shuffle of the packed feature bytes; each block is
+      sorted by global row offset, so its contents do not depend on
+      fetch order), the blocks are persisted and the pack is released.
       Without this every Lloyd pass would run on one core.
     * Otherwise the blocks are an unpersisted view of the pack,
       narrow-coalesced to ``min(partitions, want)``: no second persist
@@ -442,30 +478,29 @@ def _features_blocks(points: DataFrame, dim: int, features_col: str = "features"
 
     Either way the layout is frozen when this returns, so every pass
     folds the same rows in the same order.  The rule never fires at or
-    below one block, nor on partitions within 2x of each other.
+    below one block, nor on partitions within 2x of each other.  On
+    error the pack and the blocks are released.
     """
     import numpy as np
     from pyspark import StorageLevel
 
-    # MEMORY_AND_DISK, not PySpark's MEMORY_ONLY default: evicted blocks
-    # would otherwise re-run the scan and pack on every Lloyd pass
-    level = StorageLevel.MEMORY_AND_DISK
-    pack = _arrow_pack(points.select(features_col)).persist(level)
+    pack = _arrow_pack(points.select("features")) if isinstance(points, DataFrame) else points
     blocks = None
     try:
-        ns = pack.mapPartitions(lambda rows: [sum(int(n) for _, n in rows)]).collect()
+        if ns is None:
+            ns = pack.mapPartitions(lambda rows: [sum(int(r[-1]) for r in rows)]).collect()
         total = sum(ns)
         want = _block_count(total, dim)
         fair = total / min(want, pack.context.defaultParallelism)
         if want == 1 or max(ns) < 2 * fair:
             view = pack.coalesce(want) if want < len(ns) else pack
-            return view.mapPartitions(lambda rows: _consolidate(rows, dim)), pack
+            return view.mapPartitions(lambda rows: _block(rows, dim)), pack
 
         def _cut(i, rows):
             # block j holds the global rows [j*total//want, (j+1)*total//want);
             # each piece is keyed by its block and carries its global offset
             g = sum(ns[:i])
-            for b, n in rows:
+            for *_, b, n in rows:
                 X = np.frombuffer(b, dtype=np.float64).reshape(int(n), dim)
                 lo = 0
                 while lo < len(X):
@@ -479,7 +514,7 @@ def _features_blocks(points: DataFrame, dim: int, features_col: str = "features"
             pack.mapPartitionsWithIndex(_cut)
             .partitionBy(want, lambda j: j)
             .mapPartitions(lambda items: _regroup(items, dim))
-            .persist(level)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         blocks.count()  # materialize before releasing the pack
     except BaseException:
@@ -711,13 +746,10 @@ def _lloyd_pass(blocks, centroids, want_wssse: bool):
     bc = sc.broadcast(C) if C.nbytes > (4 << 20) else None
     Cv = C if bc is None else None
 
-    def step(it):
+    def step(block):
         Cl = Cv if bc is None else bc.value
-        mats = [X for X in it if X.size]
-        if not mats:
-            return
-        X = mats[0] if len(mats) == 1 else np.vstack(mats)
-        yield _block_stats(X, Cl, k, d, want_wssse)
+        for X in block:
+            yield _block_stats(X, Cl, k, d, want_wssse)
 
     def merge(p, q):
         return (p[0] + q[0], p[1] + q[1], p[2] + q[2])
@@ -743,24 +775,22 @@ def _lloyd_pass(blocks, centroids, want_wssse: bool):
     return out
 
 
-def _fit_single_block(rows, centroids0, k, dim, tol, max_iter, track_wssse, report_final):
-    """Run the WHOLE Lloyd loop inside one task — the single-block fast
-    path.  With one block, every 'global' reduction is that block's own
-    statistics (merging with exact zeros is the identity), so iterating
-    in-task computes the bit-identical trajectory of the per-iteration
-    distributed path while paying ONE job instead of one per iteration.
-    Shares `_block_stats` and `_lloyd_iterate` with the distributed
-    path, so the semantics cannot fork.  Yields one `KMeansResult`."""
+def _fit_single_block(X, centroids0, k, dim, tol, max_iter, track_wssse, report_final):
+    """Run the WHOLE Lloyd loop inside one task over its one block ``X``
+    (None when empty) — the single-block fast path.  With one block,
+    every 'global' reduction is that block's own statistics (merging
+    with exact zeros is the identity), so iterating in-task computes the
+    bit-identical trajectory of the per-iteration distributed path while
+    paying ONE job instead of one per iteration.  Shares `_block_stats`
+    and `_lloyd_iterate` with the distributed path, so the semantics
+    cannot fork.  Returns a `KMeansResult`."""
     import numpy as np
-
-    mats = [X for X in rows if X.size]
-    X = None if not mats else (mats[0] if len(mats) == 1 else np.vstack(mats))
 
     def pass_fn(centroids, want_wssse):
         C = np.asarray(centroids, dtype=np.float64)
         return _block_stats(X, C, k, dim, want_wssse)
 
-    yield _lloyd_iterate(
+    return _lloyd_iterate(
         pass_fn, centroids0, k, dim, tol, max_iter, track_wssse, report_final
     )
 
@@ -791,71 +821,72 @@ def fit_kmeans_native(
 
     Engine: one aggregate job counts the rows, and the layout rule
     (`_block_count`) decides from that exact count, before any Python
-    runs.
+    runs.  Without ``initial_centroids`` that aggregate also returns the
+    seeded first farthest-point pick (`_seeded_first`, shared with
+    `farthest_point_init`), and the other k-1 picks and the Lloyd loop
+    run over the same read of the input (the reference's worker chunk
+    cache, worker.go:44-60):
 
     * One block: ONE task reads the input's Arrow batches itself
-      (`_in_one_task`: no pack, no persist) and runs the whole loop, and
-      the final report, on them (`_fit_single_block`).  With explicit
-      centroids the fit is 2 Spark jobs.
-    * Otherwise the features are laid out once as numpy blocks
-      (`_features_blocks`: packed and persisted once, the layout decided
-      from exact per-partition row counts), and each iteration is one
-      RDD job over them: k x d centroids down, k x (d+1) partials per
-      block up, bytes independent of N, and the per-row distance math
-      vectorized in numpy.  The cache `_features_blocks` hands back is
-      released in this function's ``finally``, on success and on error.
-      A one-slot session lays this out as one block, and the loop runs
-      in one task over it, through the same `_fit_single_block`.
+      (`_in_one_task`: no pack, no persist), makes the picks
+      (`_init_picks`) and runs the whole loop, and the final report, on
+      them (`_fit_single_block`).  The fit is 2 Spark jobs.
+    * Otherwise the input is packed once (`_arrow_pack`, with the ids
+      only when the picks need them) and persisted, the picks run one
+      job each over the pack (`_pack_picks`; the first also returns each
+      partition's row count), and the features are laid out once as
+      numpy blocks from exact per-partition row counts
+      (`_features_blocks`).  Each iteration is one RDD job over them:
+      k x d centroids down, k x (d+1) partials per block up, bytes
+      independent of N, and the per-row distance math vectorized in
+      numpy.  The pack and the blocks are released in this function's
+      ``finally``, on success and on error.  A one-slot session lays
+      this out as one block, and the loop runs in one task over it,
+      through the same `_fit_single_block`.
 
     All shapes share `_block_stats` and `_lloyd_iterate`, so they follow
     the same trajectory, which the tests pin bitwise to a
     DataFrame-expression Lloyd loop (kept in the tests).
 
-    Pass ``cache_input=False`` when the caller already manages a cache
-    that covers ``points``.  The DataFrame cache only pays for itself
-    when farthest-point init runs, because the count, the init's
-    aggregate and picks, and the fit each read ``points``.
+    ``cache_input`` is accepted and has no effect: the fit reads its
+    input once and caches no DataFrame.  A caller that reuses ``points``
+    after the fit caches it itself.
     """
-    points = points.select("id", "features")
-    # Without init, the count and the fit (or the block pack) are the
-    # only reads of `points`; callers that pass explicit centroids skip
-    # the cache.
-    df_cached = cache_input and initial_centroids is None
-    if df_cached:
-        points = points.cache()
-    cache = None  # a failed pack still releases the df cache below
+    init = initial_centroids is None
+    if init:
+        rows, total, first = _seeded_first(points, seed)
+        centroids = [first]
+    else:
+        rows = points.select("features")
+        total = _aggregate(rows.select(), n=F.count(F.lit(1)))["n"]
+        centroids = [list(c) for c in initial_centroids]
+
+    def fit(X, centroids):
+        return _fit_single_block(X, centroids, k, dim, tol, max_iter, track_wssse, report_final)
+
+    if _block_count(total, dim) == 1:
+
+        def picks_and_fit(pieces):
+            part = _consolidate(pieces, dim)
+            picks = _init_picks(*part, centroids[0], k - 1) if init else []
+            return fit(part[-1] if part else None, centroids + picks)
+
+        return _in_one_task(rows, picks_and_fit)
+    # the cache `_features_blocks` hands back is the pack, or the re-cut
+    # blocks after it has released the pack
+    pack = cache = _arrow_pack(rows)
     try:
-        total = _aggregate(points.select(), n=F.count(F.lit(1)))["n"]
-        centroids = (
-            [list(c) for c in initial_centroids]
-            if initial_centroids is not None
-            else farthest_point_init(points, k, seed=seed)
-        )
-
-        def fused(blocks):
-            # the whole loop in one task; merging one block's partials
-            # with exact zeros is the identity, so the trajectory is
-            # bit-identical to the distributed path's
-            return _fit_single_block(
-                blocks, centroids, k, dim, tol, max_iter, track_wssse, report_final
-            )
-
-        if _block_count(total, dim) == 1:
-            return _in_one_task(
-                points.select("features"), lambda pieces: fused(_consolidate(pieces, dim))
-            )
-        blocks, cache = _features_blocks(points, dim)
+        centroids, ns = _pack_picks(pack, centroids[0], k) if init else (centroids, None)
+        blocks, cache = _features_blocks(pack, dim, ns)
         if blocks.getNumPartitions() == 1:
-            return blocks.mapPartitions(fused).collect()[0]
+            return blocks.mapPartitions(lambda b: [fit(next(b, None), centroids)]).collect()[0]
         return _lloyd_iterate(
             lambda c, w: _lloyd_pass(blocks, c, w),
             centroids, k, dim, tol, max_iter, track_wssse, report_final,
         )
     finally:
-        if cache is not None:
-            cache.unpersist()
-        if df_cached:
-            points.unpersist()
+        pack.unpersist()
+        cache.unpersist()
 
 
 def fit_kmeans_mllib(

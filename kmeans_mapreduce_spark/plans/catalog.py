@@ -74,8 +74,7 @@ def kmeans_fit_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in pts.where(F.col("id") < 4).orderBy("id").collect()
     ]
     res = fit_kmeans_native(
-        pts, k=4, dim=64, initial_centroids=init, cache_input=False,
-        report_final=True,
+        pts, k=4, dim=64, initial_centroids=init, report_final=True,
     )
     # Spark's round() is BigDecimal HALF_UP over the shortest repr;
     # Python's round() is HALF_EVEN — replicate the former exactly

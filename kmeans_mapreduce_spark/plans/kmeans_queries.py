@@ -318,7 +318,7 @@ def kmeans_fit_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         res = fit_kmeans_native(
             zpts, k=4, dim=4, initial_centroids=init, max_iter=10,
-            cache_input=False, report_final=True,
+            report_final=True,
         )
         # size report from the fit's own final assignment pass
         # (report_final) — one numpy pass instead of a separate
@@ -650,7 +650,6 @@ def kmeans_fit_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
             dim=DIM,
             initial_centroids=init,
             track_wssse=True,
-            cache_input=False,
         )
         n_total = pts.count()
 
@@ -800,7 +799,7 @@ def mllib_fit_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in pts.where(F.col("id") < K).orderBy("id").collect()
         ]
         res = fit_kmeans_native(
-            pts, k=K, dim=DIM, initial_centroids=init, cache_input=False
+            pts, k=K, dim=DIM, initial_centroids=init
         )
 
         def _wssse(cents: list[list[float]]) -> float:

@@ -505,6 +505,60 @@ def test_one_block_fit_with_init_matches_multi_block(points, monkeypatch):
     assert one.final_counts == multi.final_counts
 
 
+@pytest.mark.parametrize("layout", ["one_block", "multi_block", "coalesce1"])
+def test_fit_with_init_reads_its_input_once(points, monkeypatch, request, layout):
+    """A fit that runs its own init takes the row count and the first
+    pick from one aggregate, then makes its picks and its Lloyd passes
+    over one read of the input: one task for one block, else one pack
+    whose first pick job also counts its partitions.  It caches no
+    DataFrame.  Exact Spark jobs, `_arrow_pack` calls and RDD persists
+    at k=4 and 3 passes."""
+    from pyspark import RDD
+
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+
+    df = points
+    if layout == "multi_block":
+        # 8 cached partitions within one row of each other: 4 blocks
+        df = points.repartition(8).cache()
+        request.addfinalizer(df.unpersist)
+    elif layout == "coalesce1":
+        df = points.coalesce(1)  # one partition above one block: re-cut
+    df.count()
+    if layout != "one_block":
+        monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
+
+    packs, persists = [], []
+    arrow_pack, rdd_persist = K_mod._arrow_pack, RDD.persist
+
+    def counting_pack(*args):
+        packs.append(1)
+        return arrow_pack(*args)
+
+    def counting_persist(self, *args):
+        persists.append(1)
+        return rdd_persist(self, *args)
+
+    def no_cache(*_):
+        raise AssertionError("a fit caches no DataFrame")
+
+    monkeypatch.setattr(K_mod, "_arrow_pack", counting_pack)
+    monkeypatch.setattr(RDD, "persist", counting_persist)
+    # the session's concrete DataFrame class, which overrides both
+    monkeypatch.setattr(type(df), "cache", no_cache)
+    monkeypatch.setattr(type(df), "persist", no_cache)
+    sc = points.sparkSession.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    persisted = sc._jsc.getPersistentRDDs().size()
+    res = fit_kmeans_native(df, k=4, dim=DIM, seed=3, tol=0.0, max_iter=3)
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    assert res.iterations == 3 and len(res.centroids) == 4
+    want = {"one_block": (2, 0, 0), "multi_block": (7, 1, 1), "coalesce1": (8, 1, 2)}
+    assert (len(jobs), len(packs), len(persists)) == want[layout], sorted(jobs)
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
 def _block_rows(blocks):
     """Row count of every block, in partition order."""
     return blocks.mapPartitions(lambda it: [sum(X.shape[0] for X in it)]).collect()
@@ -638,18 +692,21 @@ def test_lloyd_pass_empty_high_partition_rdd(spark):
 
 
 def test_fit_failure_releases_caches(points, monkeypatch):
-    """A failing fit must not leak the input DataFrame cache, the pack
-    or the re-cut blocks: afterwards the session holds exactly the
-    persistent RDDs/relations it held before.  dim=63 against 64-wide
-    features makes every reshape of the packed bytes raise.  On the
-    evenly split input the blocks are a view of the pack, so the error
-    surfaces in the first Lloyd pass; on a one-partition input it
-    surfaces inside `_features_blocks`' re-cut job, after both the pack
-    and the re-cut persist exist."""
+    """A failing fit must not leak the pack or the re-cut blocks:
+    afterwards the session holds exactly the persistent RDDs it held
+    before.  dim=63 against 64-wide features makes every reshape of the
+    packed feature bytes raise.  On the evenly split input the blocks
+    are a view of the pack, so the error surfaces in the first Lloyd
+    pass; on a one-partition input it surfaces inside
+    `_features_blocks`' re-cut job, after both the pack and the re-cut
+    persist exist.  A pick of the fit's own init that raises releases
+    the pack too (multi-block), or runs in the fit's one task with
+    nothing to release (one block)."""
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
     from kmeans_mapreduce_spark.operators.kmeans import _features_blocks
 
     sc = points.sparkSession.sparkContext
+    one_block_target = K_mod._BLOCK_TARGET_BYTES
     # a small target makes both inputs multi-block
     monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
     before = sc._jsc.getPersistentRDDs().size()
@@ -663,6 +720,18 @@ def test_fit_failure_releases_caches(points, monkeypatch):
     with pytest.raises(Exception):
         fit_kmeans_native(one_part, k=3, dim=63, seed=1)
     assert sc._jsc.getPersistentRDDs().size() == before
+
+    def boom(*_):
+        raise RuntimeError("pick failed")
+
+    # the fit's pick closures resolve these names when they are pickled
+    monkeypatch.setattr(K_mod, "_init_picks", boom)
+    monkeypatch.setattr(K_mod, "_init_candidate", boom)
+    for target in (64 * 1024, one_block_target):
+        monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", target)
+        with pytest.raises(Exception, match="pick failed"):
+            fit_kmeans_native(points.repartition(4), k=3, dim=DIM, seed=1)
+        assert sc._jsc.getPersistentRDDs().size() == before
 
 
 @pytest.fixture(scope="module")

@@ -64,7 +64,7 @@ def test_single_batch_equals_one_lloyd_iteration(spark, sf_dir, points):
     model = StreamingKMeansModel([list(c) for c in init], decay=1.0)
     model.update(points)
     batch = fit_kmeans_native(
-        points, k=4, dim=64, initial_centroids=init, max_iter=1, cache_input=False
+        points, k=4, dim=64, initial_centroids=init, max_iter=1
     )
     for got, want in zip(model.centroids, batch.centroids):
         assert got == pytest.approx(want, abs=1e-9)
@@ -108,7 +108,6 @@ def test_decay_zero_forgets_history(spark, sf_dir, points):
         dim=64,
         initial_centroids=first_batch_centroids,
         max_iter=1,
-        cache_input=False,
     )
     for got, exp in zip(m.centroids, want.centroids):
         assert got == pytest.approx(exp, abs=1e-9)

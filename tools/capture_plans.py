@@ -42,7 +42,7 @@ def _fit_pack_plans(spark, sf_dir: str) -> dict[str, str]:
         points_from_embeddings,
     )
 
-    def _pack_stub(batches):  # plan-shape stand-in for _features_blocks._pack
+    def _pack_stub(batches):  # plan-shape stand-in for _arrow_pack
         for batch in batches:
             yield batch
 
