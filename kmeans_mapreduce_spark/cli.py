@@ -48,9 +48,12 @@ def _build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
+    from pyspark.sql import functions as F
+
     from kmeans_mapreduce_spark.operators.kmeans import (
         DELTA_THRESHOLD,
         ITERATION_THRESHOLD,
+        _aggregate,
         assign_clusters_broadcast,
         fit_kmeans_mllib,
         fit_kmeans_native,
@@ -100,14 +103,21 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 return 2
             pts = read_points_csv(spark, dataset, dim=args.dim)
         pts = pts.cache()
-        n = pts.count()
+        # one job builds the cache and returns the row count and the
+        # width of the first row
+        stats = _aggregate(
+            pts.select("features", F.monotonically_increasing_id().alias("pos")),
+            n=F.count(F.lit(1)),
+            width=F.min_by(F.size("features"), "pos"),
+        )
+        n = stats["n"]
         # k validation = client.go:188-205 (reject, don't re-prompt);
         # runs before dim inference so an empty dataset gets this
-        # message, not a head()-returned-None traceback
+        # message, not a missing width
         if args.k is None or not 0 < args.k <= n:
             print(f"--k must satisfy 0 < k <= {n} (rows)", file=sys.stderr)
             return 2
-        dim = args.dim or len(pts.select("features").head()["features"])
+        dim = args.dim or stats["width"]
 
         if args.engine == "mllib":
             _, assigned = fit_kmeans_mllib(

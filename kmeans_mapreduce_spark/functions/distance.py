@@ -17,7 +17,8 @@ functions below, written once each:
 The fold is ``aggregate(zip_with(a, b, (x-y)*(x-y)), zero, +)``:
 ``(x-y)*(x-y)`` (not ``pow``) keeps the IEEE op sequence identical to a
 left-to-right SQL sum, which lets DuckDB oracles and the numpy block
-engine (`operators/kmeans._sq_dists`) reproduce results bit-for-bit.
+engine (`operators/kmeans._sq_dists`, the same per-dimension fold over
+a transposed chunk of rows) reproduce results bit-for-bit.
 SQL text, not nested Column objects: a k x d literal as Column trees
 costs one py4j round trip per element (building and analyzing the
 distance array at k=16, d=64 took 0.8 s of driver time on a 4-core

@@ -7,19 +7,23 @@ worker.go).  The Spark-first re-expression:
   -------------------------------------------   -------------------------------
   getChunks partitioner (master.go:511-547)     _block_count from the exact
                                                 row count; above one block,
-                                                _features_blocks lays out
-                                                blocks from exact counts
+                                                _features_blocks lays the
+                                                blocks out in the scan's
+                                                own tasks, cut at global
+                                                row boundaries when the
+                                                input is skewed
   worker chunk cache (worker.go:54-60)          one read of the input per
                                                 fit, shared by the picks
                                                 and the passes.  One block:
                                                 none, one task reads the
                                                 Arrow batches
                                                 (_in_one_task); above one
-                                                block: one pack, persisted
-                                                once (_arrow_pack)
+                                                block: the numpy blocks,
+                                                persisted once
+                                                (_features_blocks)
   Map: classify (worker.go:288-304)             _block_stats: numpy distances
                                                 (_sq_dists) and SQL's argmin
-                                                (_argmin_rows) in 64k-row
+                                                (_argmin_rows) in 16k-row
                                                 chunks, one task per block
   Combine partial sums (worker.go:169-189)      _block_stats: per-cluster
                                                 count and row-order sums of
@@ -39,7 +43,7 @@ worker.go).  The Spark-first re-expression:
                                                 picks: in the fit's one
                                                 task for one block, else
                                                 one job per pick over the
-                                                fit's pack
+                                                fit's blocks
 
 Scale posture (the part the reference gets wrong at 100 TB):
   * memberships are NEVER collected — assignment stays a lazy column
@@ -195,10 +199,11 @@ def farthest_point_init(
       input's Arrow batches itself (`_in_one_task`: no pack, no
       persist), keeping ``md = fmin(md, d2(X, newest pick))`` per row
       (`_init_picks`) — 2 Spark jobs in all;
-    * otherwise: the input is packed once (`_arrow_pack`) and one job
-      per pick runs over the pack's partitions (`_pack_picks`; the
-      first materializes it) — k jobs in all.  The pack is released on
-      return and on error.
+    * otherwise: the input is laid out once as numpy blocks that carry
+      the ids (`_features_blocks`) and one job per pick runs over them
+      (`_block_picks`; the first materializes them) — k jobs in all,
+      plus a per-partition count on a skewed input.  The blocks are
+      released on return and on error.
 
     A fit that runs its own init (`fit_kmeans_native` without
     ``initial_centroids``) shares the aggregate, the one-block picks and
@@ -210,7 +215,7 @@ def farthest_point_init(
     first), and ties break to the lowest id, so reruns are bit-identical.
     An empty input raises ``ValueError``.
     """
-    rows, total, first = _seeded_first(points, seed, features_col, id_col)
+    rows, total, top, first = _seeded_first(points, seed, features_col, id_col)
     if k < 2:
         return [first]
     dim = len(first)
@@ -218,19 +223,20 @@ def farthest_point_init(
         return [first] + _in_one_task(
             rows, lambda pieces: _init_picks(*_consolidate(pieces, dim), first, k - 1)
         )
-    pack = _arrow_pack(rows)
+    blocks = _features_blocks(rows, dim, total, top)
     try:
-        return _pack_picks(pack, first, k)[0]
+        return _block_picks(blocks, first, k)
     finally:
-        pack.unpersist()
+        blocks.unpersist()
 
 
 def _seeded_first(points: DataFrame, seed: int, features_col="features", id_col="id"):
-    """``(rows, n, first)``: the points as ``(id as long, features)``
-    rows, their count and the seeded first farthest-point pick, from ONE
-    `_aggregate`.  The first pick is the row with the lowest
-    ``(xxhash64(id, seed), id)``, ties to the earlier row.  An empty
-    input raises ``ValueError``."""
+    """``(rows, n, top, first)``: the points as ``(id as long,
+    features)`` rows, their count, the row count of their largest
+    partition (`_largest_partition`) and the seeded first farthest-point
+    pick, from ONE `_aggregate`.  The first pick is the row with the
+    lowest ``(xxhash64(id, seed), id)``, ties to the earlier row.  An
+    empty input raises ``ValueError``."""
     ids, feats = F.col(id_col).cast("long").alias("i"), F.col(features_col).alias("x")
     stats = _aggregate(
         points.select(
@@ -241,11 +247,13 @@ def _seeded_first(points: DataFrame, seed: int, features_col="features", id_col=
             F.monotonically_increasing_id().alias("pos"),
         ),
         n=F.count(F.lit(1)),
+        top=_largest_partition(),
         first=F.min_by("x", F.struct("h", "i", "pos")),
     )
     if not stats["n"]:
         raise ValueError("farthest_point_init: the input points are empty")
-    return points.select(ids, feats), stats["n"], [float(v) for v in stats["first"]]
+    first = [float(v) for v in stats["first"]]
+    return points.select(ids, feats), stats["n"], stats["top"], first
 
 
 def _farthest(md, ids) -> int:
@@ -272,37 +280,30 @@ def _init_picks(ids, X, first, picks: int):
     return out
 
 
-def _pack_picks(pack, first, k: int):
-    """``(centroids, ns)``: ``first`` and the k-1 farthest picks after
-    it, one job per pick over the partitions of ``pack`` (an
-    `_arrow_pack` of ``(id, features)``), and each partition's row count
-    from the first of those jobs (None when k < 2).  Each task returns
-    its farthest row from the centroids so far (InitMap and
-    InitCombine, worker.go:232-285), and the driver keeps the farthest
-    of those (InitReduce, worker.go:106-129)."""
+def _block_picks(blocks, first, k: int):
+    """``first`` and the k-1 farthest picks after it, one job per pick
+    over ``blocks`` (`_features_blocks` of ``(id, features)``).  Each
+    task returns its block's farthest row from the centroids so far
+    (InitMap and InitCombine, worker.go:232-285), and the driver keeps
+    the farthest of those (InitReduce, worker.go:106-129)."""
     import numpy as np
 
-    centroids, ns = [first], None
+    centroids = [first]
     for _ in range(k - 1):
         C = np.asarray(centroids, dtype=np.float64)
-        out = pack.mapPartitions(lambda pieces: _init_candidate(pieces, C)).collect()
-        ns = ns or [n for n, _ in out]
-        cands = [c for _, c in out if c is not None]
+        cands = blocks.mapPartitions(lambda parts: _init_candidate(parts, C)).collect()
         j = _farthest(np.array([c[0] for c in cands]), np.array([c[1] for c in cands]))
         centroids.append(cands[j][2])
-    return centroids, ns
+    return centroids
 
 
-def _init_candidate(pieces, C):
-    """One partition's row count, and its farthest row from centroids
-    ``C`` as ``(min distance, id, features)`` (None for no rows)."""
-    part = _consolidate(pieces, C.shape[1])
-    if part is None:
-        return [(0, None)]
-    ids, X = part
-    md = _min_d2(X, C)
-    j = _farthest(md, ids)
-    return [(len(ids), (float(md[j]), int(ids[j]), X[j].tolist()))]
+def _init_candidate(parts, C):
+    """The farthest row of a block's ``(ids, X)`` from centroids ``C``,
+    as ``(min distance, id, features)``; nothing for an empty block."""
+    for ids, X in parts:
+        md = _min_d2(X, C)
+        j = _farthest(md, ids)
+        yield float(md[j]), int(ids[j]), X[j].tolist()
 
 
 @dataclass
@@ -355,6 +356,13 @@ def _aggregate(df: DataFrame, **aggs: Column) -> dict:
     return obs.get
 
 
+def _largest_partition() -> Column:
+    """Aggregate column: the row count of the largest partition, read
+    off a ``pos`` column of ``monotonically_increasing_id()`` (the row's
+    index in its partition is its low 33 bits)."""
+    return F.max(F.col("pos").bitwiseAND(F.lit((1 << 33) - 1))) + 1
+
+
 def _batch_arrays(batch):
     """One Arrow batch as a tuple of contiguous numpy arrays: the int64
     values of each leading column, the float64 flattened values of the
@@ -365,35 +373,6 @@ def _batch_arrays(batch):
     ints = [np.ascontiguousarray(s.to_numpy(zero_copy_only=False), dtype=np.int64) for s in scalars]
     flat = np.ascontiguousarray(col.flatten().to_numpy(zero_copy_only=False), dtype=np.float64)
     return (*ints, flat, len(col))
-
-
-def _arrow_pack(df: DataFrame):
-    """The Arrow pack stage: each Arrow batch of ``df`` becomes ONE
-    plain tuple (no per-row pickling) of the bytes of its
-    `_batch_arrays` and its row count.  Returns the RDD of tuples,
-    persisted MEMORY_AND_DISK (PySpark's MEMORY_ONLY default would
-    re-run the scan and the pack for evicted partitions on every read);
-    the caller unpersists it.
-
-    The ``.rdd.map(tuple)`` bridge costs each pack task a second Python
-    worker, but the bare ``.rdd`` caches pickled ``Row`` objects, which
-    are larger and slower to read on every Lloyd pass (BASELINE.md,
-    "Dead ends")."""
-    import pyarrow as pa
-    from pyspark import StorageLevel
-
-    names = [f"c{i}" for i in range(len(df.columns) - 1)] + ["b"]
-
-    def _pack(batches):
-        for batch in batches:
-            *arrays, n = _batch_arrays(batch)
-            out = {name: [a.tobytes()] for name, a in zip(names, arrays)}
-            out["n"] = [n]
-            yield pa.RecordBatch.from_pydict(out)
-
-    schema = ", ".join([f"{name} binary" for name in names] + ["n long"])
-    pack = df.mapInArrow(_pack, schema=schema).rdd.map(tuple)
-    return pack.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _in_one_task(df: DataFrame, fn):
@@ -414,10 +393,10 @@ def _in_one_task(df: DataFrame, fn):
 
 
 def _consolidate(pieces, dim: int):
-    """``(*int64s, float64s, n)`` pieces (buffers of an `_arrow_pack`,
-    or `_batch_arrays`) -> ``(*int64 arrays, (n x dim) float64
+    """``(*int64s, float64s, n)`` pieces (byte buffers of the block
+    builder, or `_batch_arrays`) -> ``(*int64 arrays, (n x dim) float64
     matrix)`` of all their rows, in row order; None when they hold no
-    rows.  The one stacker of the init, the fit and the re-cut."""
+    rows.  The one stacker of the init, the fit and the blocks."""
     import numpy as np
 
     pieces = [p for p in pieces if p[-1]]
@@ -432,106 +411,125 @@ def _consolidate(pieces, dim: int):
 
 
 def _block(pieces, dim: int):
-    """The feature matrix of ``pieces`` (`_consolidate`) as a block: a
-    list of at most one matrix, the ids dropped."""
+    """``pieces`` (`_consolidate`) as a block: a list of at most one
+    ``(*int64 arrays, feature matrix)`` tuple."""
     part = _consolidate(pieces, dim)
-    return [part[-1]] if part else []
+    return [part] if part else []
 
 
-def _regroup(items, dim: int):
-    """One re-cut block from its ``(block, (global offset, bytes, n))``
+def _regroup(rows, dim: int):
+    """One cut block from its ``(block, global offset, *bytes, n)``
     pieces, sorted by global row offset: its contents do not depend on
     the order the shuffle fetched them in."""
-    pieces = sorted((v for _, v in items), key=lambda v: v[0])
-    return _block(((b, n) for _, b, n in pieces), dim)
+    return _block((r[2:] for r in sorted(rows, key=lambda r: r[1])), dim)
 
 
-def _features_blocks(points, dim: int, ns=None):
-    """Lay the points' feature vectors out as numpy blocks, at most one
-    (n_i x dim) float64 matrix per partition, and return ``(blocks,
-    cache)``: the caller unpersists ``cache`` after the fit.
+def _cuts(g: int, n: int, total: int, want: int):
+    """``(block, lo, hi)``: the rows ``[g, g + n)`` of ``total`` cut at
+    the bounds of ``want`` blocks, block j holding the global rows
+    ``[j*total//want, (j+1)*total//want)``; ``lo:hi`` is local."""
+    lo = 0
+    while lo < n:
+        j = ((g + lo + 1) * want - 1) // total
+        hi = min(n, (j + 1) * total // want - g)
+        yield j, lo, hi
+        lo = hi
 
-    ``points`` is a DataFrame, whose ``features`` are packed here, or an
-    `_arrow_pack` the caller made, whose leading id columns the blocks
-    drop; then ``ns``, when given, are its per-partition row counts.
 
-    The features are packed ONCE, at the input's native parallelism
-    (`_arrow_pack`: one contiguous float64 buffer per Arrow batch,
-    persisted as plain tuples).  The layout is decided once, from each
-    partition's exact row count: ``ns``, or else one job that counts the
-    pack's rows and materializes it.  With ``want`` blocks of about
-    ``_BLOCK_TARGET_BYTES``, the input is skewed iff ``want > 1`` and
-    its largest partition holds at least twice the fair share of
-    ``min(want, slots)`` tasks: a one-partition input above one block,
-    or a file whose single row group lands every row in one split.
+class PartitionCountMismatch(RuntimeError):
+    """A partition of the input holds other rows than the count its
+    blocks were cut from: the input is not the same on every read."""
 
-    * Skewed: the packed rows are re-cut into ``want`` contiguous global
-      row ranges (one shuffle of the packed feature bytes; each block is
-      sorted by global row offset, so its contents do not depend on
-      fetch order), the blocks are persisted and the pack is released.
-      Without this every Lloyd pass would run on one core.
-    * Otherwise the blocks are an unpersisted view of the pack,
-      narrow-coalesced to ``min(partitions, want)``: no second persist
-      and no second job, and the feature matrix is cached once.  The
-      coalesce reads the cached pack; placed before the pack it would
-      run the scan and the pack inside the merged tasks.
 
-    Either way the layout is frozen when this returns, so every pass
-    folds the same rows in the same order.  The rule never fires at or
-    below one block, nor on partitions within 2x of each other.  On
-    error the pack and the blocks are released.
+def _partition_counts(rows: DataFrame) -> dict:
+    """``{partition id: rows}`` of the non-empty partitions of ``rows``,
+    from one JVM-only grouped count.  Each row counts as
+    ``coalesce(size(features), 0) * 0 + 1``, which keeps the features in
+    the scan (the optimizer turns a count of a never-null column into
+    ``count(1)`` and prunes the column): the count must see the input
+    split as the cut, which reads the features, sees it."""
+    one = F.coalesce(F.size(rows.columns[-1]), F.lit(0)) * 0 + 1
+    counts = rows.groupBy(F.spark_partition_id().alias("p")).agg(F.sum(one).alias("n"))
+    return {r["p"]: r["n"] for r in counts.collect()}
+
+
+def _features_blocks(rows: DataFrame, dim: int, total: int, top: int):
+    """Lay ``rows`` (``features``, or ``(id as long, features)`` when
+    the picks need the ids) out as numpy blocks, in one pass from the
+    scan: an RDD of at most one `_consolidate` tuple per partition,
+    ``(X,)`` or ``(ids, X)`` with ``X`` the (n_i x dim) float64 matrix,
+    persisted MEMORY_AND_DISK.  The first job that reads it materializes
+    it (on a skewed input AQE runs the cut's map stage already when the
+    RDD is taken); the caller unpersists it.
+
+    ``total`` rows want ``want`` blocks of about ``_BLOCK_TARGET_BYTES``
+    (`_block_count`).  The input is skewed iff its largest partition
+    (``top`` rows, `_largest_partition`) holds at least twice the fair
+    share of ``min(want, slots)`` tasks: a one-partition input above one
+    block, or a file whose single row group lands every row in one
+    split.  One ``mapInArrow`` packs each Arrow batch (`_batch_arrays`)
+    as ``(block, global offset, *bytes, n)`` pieces:
+
+    * Unskewed: one piece per batch; a narrow ``coalesce`` merges whole
+      partitions, each in row order, into ``min(partitions, want)``
+      blocks.
+    * Skewed: each batch is cut at the bounds of ``want`` equal blocks
+      of global rows (`_cuts`), from every partition's exact row count
+      (`_partition_counts`), and ``repartitionById`` routes each piece
+      to its block, where `_regroup` sorts the pieces by offset.  A
+      partition whose rows differ from its count raises
+      `PartitionCountMismatch`.  Without the cut every Lloyd pass would
+      run on one core.
+
+    Either way the persist freezes the layout, so every pass folds the
+    same rows in the same order.
     """
-    import numpy as np
-    from pyspark import StorageLevel
+    import pyarrow as pa
+    from pyspark import StorageLevel, TaskContext
 
-    pack = _arrow_pack(points.select("features")) if isinstance(points, DataFrame) else points
-    blocks = None
-    try:
-        if ns is None:
-            ns = pack.mapPartitions(lambda rows: [sum(int(r[-1]) for r in rows)]).collect()
-        total = sum(ns)
-        want = _block_count(total, dim)
-        fair = total / min(want, pack.context.defaultParallelism)
-        if want == 1 or max(ns) < 2 * fair:
-            view = pack.coalesce(want) if want < len(ns) else pack
-            return view.mapPartitions(lambda rows: _block(rows, dim)), pack
+    want = _block_count(total, dim)
+    skewed = top >= 2 * total / min(want, rows.sparkSession.sparkContext.defaultParallelism)
+    # partition id -> (global offset of its first row, its row count)
+    spans, offset = {}, 0
+    for p, n in sorted(_partition_counts(rows).items()) if skewed else ():
+        spans[p], offset = (offset, n), offset + n
+    names = [f"c{i}" for i in range(len(rows.columns) - 1)] + ["b"]
+    binary = [(c, pa.binary()) for c in names]
+    schema = pa.schema([("j", pa.int32()), ("g", pa.int64()), *binary, ("n", pa.int64())])
 
-        def _cut(i, rows):
-            # block j holds the global rows [j*total//want, (j+1)*total//want);
-            # each piece is keyed by its block and carries its global offset
-            g = sum(ns[:i])
-            for *_, b, n in rows:
-                X = np.frombuffer(b, dtype=np.float64).reshape(int(n), dim)
-                lo = 0
-                while lo < len(X):
-                    j = ((g + lo + 1) * want - 1) // total
-                    hi = min(len(X), (j + 1) * total // want - g)
-                    yield j, (g + lo, X[lo:hi].tobytes(), hi - lo)
-                    lo = hi
-                g += len(X)
+    def _pack(batches):
+        i = TaskContext.get().partitionId()
+        start, count = spans.get(i, (0, 0))
+        g = start
+        for batch in batches:
+            *ints, flat, n = _batch_arrays(batch)
+            arrays = (*ints, flat.reshape(n, dim))
+            if skewed and g + n > start + count:
+                raise PartitionCountMismatch(f"partition {i} holds more than the {count} rows counted")
+            for j, lo, hi in _cuts(g, n, total, want) if skewed else [(0, 0, n)]:
+                cols = [[j], [g + lo], *([a[lo:hi].tobytes()] for a in arrays), [hi - lo]]
+                yield pa.RecordBatch.from_pydict(dict(zip(schema.names, cols)), schema=schema)
+            g += n
+        if skewed and g != start + count:
+            raise PartitionCountMismatch(f"partition {i} holds {g - start} rows, {count} counted")
 
-        blocks = (
-            pack.mapPartitionsWithIndex(_cut)
-            .partitionBy(want, lambda j: j)
-            .mapPartitions(lambda items: _regroup(items, dim))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        blocks.count()  # materialize before releasing the pack
-    except BaseException:
-        if blocks is not None:
-            blocks.unpersist()
-        pack.unpersist()
-        raise
-    pack.unpersist()
-    return blocks, blocks
+    ddl = "j int, g long, " + "".join(f"{c} binary, " for c in names) + "n long"
+    pieces = rows.mapInArrow(_pack, ddl)
+    if skewed:
+        blocks = pieces.repartitionById(want, "j").rdd.mapPartitions(lambda r: _regroup(r, dim))
+    else:
+        blocks = pieces.coalesce(want).rdd.mapPartitions(lambda r: _block((x[2:] for x in r), dim))
+    return blocks.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-#: rows per distance-scratch chunk (`_chunk_dists`): 64k rows x k=4
-#: doubles = 2 MB per buffer — L2/L3-resident and small enough that the
-#: allocator recycles it without mmap round-trips (first-touch page
-#: faults on fresh ~100 MB scratch dominated per-pass time at 64 MB
-#: blocks).  Chunking is fold-neutral: see `_block_stats`.
-_CHUNK_ROWS = 1 << 16
+#: rows per distance-scratch chunk (`_chunk_dists`): 16k rows x d=64
+#: doubles = 8 MB of transposed rows, and 512 KB per (k=4 x 16k)
+#: buffer — small enough that the allocator recycles them without mmap
+#: round-trips (first-touch page faults on fresh ~100 MB scratch
+#: dominated per-pass time at 64 MB blocks).  8k-16k rows were fastest
+#: at d=64 (64k: 25% slower).  Chunking is fold-neutral: see
+#: `_block_stats`.
+_CHUNK_ROWS = 1 << 14
 
 
 def _block_stats(X, C, k: int, d: int, want_wssse: bool):
@@ -571,7 +569,10 @@ def _block_stats(X, C, k: int, d: int, want_wssse: bool):
     faults every pass on every worker (measured 15.9 s vs 0.7 s
     steady-state for the IDENTICAL call on this guest; on healthy
     hosts still ~10s of ms per pass per task) — while the chunk
-    scratch stays allocator-resident and L2-sized.
+    scratch stays allocator-resident and L2-sized.  Each chunk is
+    transposed once, so the per-dimension fold reads contiguous memory
+    (one core of a 4-core host: 114 -> 73 ms per 70000 x 64 block at
+    k=4, same bits).
     """
     import numpy as np
 
@@ -596,19 +597,21 @@ def _block_stats(X, C, k: int, d: int, want_wssse: bool):
     return (cnt, s, w)
 
 
-def _sq_dists(Xc, C, out, buf):
-    """Squared distances of each row of ``Xc`` (m x d) to each row of
-    ``C`` (k x d), written into ``out`` (m x k, returned); ``buf`` is
-    scratch of the same shape.  THE distance kernel of the engine: the
-    per-dimension left-to-right fold of the Spark expression
-    `functions.distance.sq_dist_sql` builds."""
+def _sq_dists(Xt, C, out, buf):
+    """Squared distances of each column of ``Xt`` (d x m: a chunk of
+    rows, transposed) to each row of ``C`` (k x d), written into ``out``
+    (k x m, returned); ``buf`` is scratch of the same shape.  THE
+    distance kernel of the engine: the per-dimension left-to-right fold
+    of the Spark expression `functions.distance.sq_dist_sql` builds.
+    Each step reads one contiguous row of ``Xt`` (the rows' dimension j)
+    instead of a column of the rows, strided by d doubles."""
     import numpy as np
 
     out.fill(0.0)
-    for j in range(Xc.shape[1]):
+    for j in range(Xt.shape[0]):
         # identical values/order to `out += diff * diff` with
-        # diff = Xc[:, j, None] - C[None, :, j]; just buffer-reusing
-        np.subtract(Xc[:, j, None], C[None, :, j], out=buf)
+        # diff = Xt[j] - C[:, j, None]; just buffer-reusing
+        np.subtract(Xt[j], C[:, j, None], out=buf)
         np.multiply(buf, buf, out=buf)
         out += buf
     return out
@@ -616,18 +619,21 @@ def _sq_dists(Xc, C, out, buf):
 
 def _chunk_dists(X, C):
     """Yield ``(lo, hi, D)`` over ``X`` in ``_CHUNK_ROWS``-row chunks,
-    ``D`` the (hi-lo x k) `_sq_dists` of rows ``lo:hi`` to ``C``, written
-    into one scratch reused across chunks (valid until the next yield).
+    ``D`` the (hi-lo x k) `_sq_dists` of rows ``lo:hi`` to ``C`` (a
+    transposed view), computed over a transposed copy of the chunk.  All
+    scratch is reused across chunks (valid until the next yield).
     Per-row work is independent, so chunking changes no fold."""
     import numpy as np
 
-    n, k = X.shape[0], C.shape[0]
+    (n, d), k = X.shape, C.shape[0]
     m0 = min(n, _CHUNK_ROWS)
-    D = np.empty((m0, k), dtype=np.float64)
-    buf = np.empty((m0, k), dtype=np.float64)
+    T, D, buf = np.empty(d * m0), np.empty(k * m0), np.empty(k * m0)
     for lo in range(0, n, _CHUNK_ROWS):
         hi = min(n, lo + _CHUNK_ROWS)
-        yield lo, hi, _sq_dists(X[lo:hi], C, D[: hi - lo], buf[: hi - lo])
+        m = hi - lo
+        Xt = T[: d * m].reshape(d, m)
+        np.copyto(Xt, X[lo:hi].T)
+        yield lo, hi, _sq_dists(Xt, C, D[: k * m].reshape(k, m), buf[: k * m].reshape(k, m)).T
 
 
 def _argmin_rows(D):
@@ -720,8 +726,9 @@ def _lloyd_iterate(
 
 
 def _lloyd_pass(blocks, centroids, want_wssse: bool):
-    """One distributed Lloyd pass over cached numpy blocks: returns
-    (counts[k], sums[k x d], wssse) merged across partitions.
+    """One distributed Lloyd pass over cached numpy blocks (each a
+    `_consolidate` tuple whose last array is the feature matrix):
+    returns (counts[k], sums[k x d], wssse) merged across partitions.
 
     Per-block arithmetic is `_block_stats`; partials are merged in
     partition-index order at the driver — deterministic, where the old
@@ -748,8 +755,8 @@ def _lloyd_pass(blocks, centroids, want_wssse: bool):
 
     def step(block):
         Cl = Cv if bc is None else bc.value
-        for X in block:
-            yield _block_stats(X, Cl, k, d, want_wssse)
+        for part in block:
+            yield _block_stats(part[-1], Cl, k, d, want_wssse)
 
     def merge(p, q):
         return (p[0] + q[0], p[1] + q[1], p[2] + q[2])
@@ -831,18 +838,16 @@ def fit_kmeans_native(
       (`_in_one_task`: no pack, no persist), makes the picks
       (`_init_picks`) and runs the whole loop, and the final report, on
       them (`_fit_single_block`).  The fit is 2 Spark jobs.
-    * Otherwise the input is packed once (`_arrow_pack`, with the ids
-      only when the picks need them) and persisted, the picks run one
-      job each over the pack (`_pack_picks`; the first also returns each
-      partition's row count), and the features are laid out once as
-      numpy blocks from exact per-partition row counts
-      (`_features_blocks`).  Each iteration is one RDD job over them:
+    * Otherwise the input is laid out once as numpy blocks, with the
+      ids only when the picks need them (`_features_blocks`: one pass
+      from the scan, one persist), the picks run one job each over them
+      (`_block_picks`), and each iteration is one RDD job over them:
       k x d centroids down, k x (d+1) partials per block up, bytes
       independent of N, and the per-row distance math vectorized in
-      numpy.  The pack and the blocks are released in this function's
-      ``finally``, on success and on error.  A one-slot session lays
-      this out as one block, and the loop runs in one task over it,
-      through the same `_fit_single_block`.
+      numpy.  The first job over the blocks materializes them; they are
+      released in this function's ``finally``, on success and on error.
+      A one-slot session lays this out as one block, and the loop runs
+      in one task over it, through the same `_fit_single_block`.
 
     All shapes share `_block_stats` and `_lloyd_iterate`, so they follow
     the same trajectory, which the tests pin bitwise to a
@@ -854,11 +859,13 @@ def fit_kmeans_native(
     """
     init = initial_centroids is None
     if init:
-        rows, total, first = _seeded_first(points, seed)
+        rows, total, top, first = _seeded_first(points, seed)
         centroids = [first]
     else:
         rows = points.select("features")
-        total = _aggregate(rows.select(), n=F.count(F.lit(1)))["n"]
+        pos = F.monotonically_increasing_id().alias("pos")
+        stats = _aggregate(rows.select(pos), n=F.count(F.lit(1)), top=_largest_partition())
+        total, top = stats["n"], stats["top"]
         centroids = [list(c) for c in initial_centroids]
 
     def fit(X, centroids):
@@ -872,21 +879,18 @@ def fit_kmeans_native(
             return fit(part[-1] if part else None, centroids + picks)
 
         return _in_one_task(rows, picks_and_fit)
-    # the cache `_features_blocks` hands back is the pack, or the re-cut
-    # blocks after it has released the pack
-    pack = cache = _arrow_pack(rows)
+    blocks = _features_blocks(rows, dim, total, top)
     try:
-        centroids, ns = _pack_picks(pack, centroids[0], k) if init else (centroids, None)
-        blocks, cache = _features_blocks(pack, dim, ns)
+        if init:
+            centroids = _block_picks(blocks, centroids[0], k)
         if blocks.getNumPartitions() == 1:
-            return blocks.mapPartitions(lambda b: [fit(next(b, None), centroids)]).collect()[0]
+            return blocks.mapPartitions(lambda b: [fit(next(b, (None,))[-1], centroids)]).collect()[0]
         return _lloyd_iterate(
             lambda c, w: _lloyd_pass(blocks, c, w),
             centroids, k, dim, tol, max_iter, track_wssse, report_final,
         )
     finally:
-        pack.unpersist()
-        cache.unpersist()
+        blocks.unpersist()
 
 
 def fit_kmeans_mllib(

@@ -67,32 +67,36 @@ def test_cli_menu_and_validation(spark, tmp_path, capsys):
 
 
 def test_cli_native_fit_reads_its_cached_input_once(spark, tmp_path, monkeypatch):
-    """The CLI's native run caches its points, then fits with its own
-    init: the fit takes 2 Spark jobs (one aggregate, one task), packs
-    and caches nothing, and leaves the CLI's cache in place."""
+    """The CLI's native run caches its points, and one aggregate job
+    builds that cache and returns the row count and the width before the
+    fit.  The fit runs its own init: it takes 2 Spark jobs (one
+    aggregate, one task), lays out and caches nothing, and leaves the
+    CLI's cache in place."""
     from pyspark import StorageLevel
 
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
     from kmeans_mapreduce_spark.cli import main
 
     fit = K_mod.fit_kmeans_native
+    tracker = spark.sparkContext.statusTracker()
+    start = set(tracker.getJobIdsForGroup())
     seen = []
 
     def no_cache(*_):
         raise AssertionError("the fit caches no DataFrame")
 
-    def no_pack(*_):
-        raise AssertionError("a one-block fit packs nothing")
+    def no_layout(*_):
+        raise AssertionError("a one-block fit lays out no blocks")
 
     def checked_fit(points, **kw):
         assert points.storageLevel != StorageLevel.NONE
         assert kw.get("initial_centroids") is None
-        tracker = spark.sparkContext.statusTracker()
         before = set(tracker.getJobIdsForGroup())
+        seen.append(len(before - start))
         with monkeypatch.context() as m:
             m.setattr(type(points), "cache", no_cache)
             m.setattr(type(points), "persist", no_cache)
-            m.setattr(K_mod, "_arrow_pack", no_pack)
+            m.setattr(K_mod, "_features_blocks", no_layout)
             res = fit(points, **kw)
         seen.append(len(set(tracker.getJobIdsForGroup()) - before))
         assert points.storageLevel != StorageLevel.NONE
@@ -101,4 +105,5 @@ def test_cli_native_fit_reads_its_cached_input_once(spark, tmp_path, monkeypatch
     monkeypatch.setattr(K_mod, "fit_kmeans_native", checked_fit)
     csv = _write_csv(tmp_path)
     assert main([csv, "--dim", "3", "--k", "3"], spark=spark) == 0
-    assert seen == [2]
+    # the CLI's jobs before the fit, then the fit's
+    assert seen == [1, 2]

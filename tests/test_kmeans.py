@@ -412,14 +412,20 @@ def test_block_stats_matches_unbuffered_reference():
         w = float(np.cumsum(D[np.arange(n), a])[-1]) if want_wssse else 0.0
         return (cnt, s, w)
 
+    from kmeans_mapreduce_spark.operators.kmeans import _CHUNK_ROWS
+
     rng = np.random.default_rng(11)
-    # 65535/65536/65537/200000 straddle the r16 _CHUNK_ROWS boundary
-    # (one full chunk, one-short, one-over, multi-chunk) — the chunked
-    # distance/argmin path must stay bit-identical to the full-matrix
-    # reference on every side of it
+    # sizes straddle the _CHUNK_ROWS boundary (one-short, one full
+    # chunk, one-over, multi-chunk), with d=1 and k=1 on each side — the
+    # chunked, transposed distance/argmin path must stay bit-identical
+    # to the full-matrix reference on every side of it
+    m = _CHUNK_ROWS
     for n, d, k in [(1, 1, 1), (50, 1, 3), (1000, 4, 4), (500, 64, 4),
                     (20000, 4, 7), (333, 16, 2), (65535, 4, 4),
-                    (65536, 2, 3), (65537, 4, 4), (200000, 3, 5)]:
+                    (65536, 2, 3), (65537, 4, 4), (200000, 3, 5),
+                    (m - 1, 64, 4), (m, 64, 4), (m + 1, 64, 4),
+                    (m - 1, 1, 3), (m, 1, 3), (m + 1, 1, 3),
+                    (m - 1, 8, 1), (m, 8, 1), (m + 1, 8, 1), (3 * m + 5, 1, 1)]:
         X = rng.standard_normal((n, d)) * rng.uniform(1e-3, 1e3)
         C = rng.standard_normal((k, d))
         for w in (False, True):
@@ -431,6 +437,39 @@ def test_block_stats_matches_unbuffered_reference():
     # empty-block identity
     ca, sa, wa = _block_stats(None, np.zeros((2, 3)), 2, 3, True)
     assert int(ca.sum()) == 0 and float(sa.sum()) == 0.0 and wa == 0.0
+
+
+def test_min_d2_matches_unchunked_fold():
+    """`_min_d2` (the init's per-row min distance, chunked and
+    transposed like `_block_stats`) is bit-identical to an unchunked
+    per-dimension fold followed by an ``fmin`` over the centroids, fed
+    all at once or one at a time into the running minimum, for k=1 and
+    k>1, across chunk boundaries, with a NaN row (its distances are all
+    NaN, and so is its minimum)."""
+    import numpy as np
+
+    from kmeans_mapreduce_spark.operators.kmeans import _CHUNK_ROWS, _min_d2
+
+    def reference(X, C):
+        D = np.zeros((X.shape[0], C.shape[0]))
+        for j in range(X.shape[1]):
+            diff = X[:, j, None] - C[None, :, j]
+            D += diff * diff
+        return np.fmin.reduce(D, axis=1)
+
+    rng = np.random.default_rng(13)
+    for n, d, k in [(1, 1, 1), (700, 64, 1), (700, 64, 5), (_CHUNK_ROWS + 1, 3, 1),
+                    (2 * _CHUNK_ROWS + 7, 16, 4)]:
+        X = rng.standard_normal((n, d)) * rng.uniform(1e-3, 1e3)
+        X[n // 2, d - 1] = np.nan
+        C = rng.standard_normal((k, d))
+        want = reference(X, C)
+        assert np.isnan(want[n // 2])
+        assert _min_d2(X, C).tobytes() == want.tobytes(), (n, d, k)
+        md = None
+        for c in range(k):
+            md = _min_d2(X, C[c : c + 1], md)
+        assert md.tobytes() == want.tobytes(), (n, d, k)
 
 
 def test_multi_block_engine_matches_single_block(points, monkeypatch):
@@ -492,7 +531,7 @@ def test_one_block_fit_with_init_matches_multi_block(points, monkeypatch):
     """A one-block fit that runs farthest-point init itself (both in one
     task each) gives bit-identical centroids to the same call forced
     multi-block by a 64 KiB block target (init then runs one job per
-    pick over a pack, and the loop one job per pass)."""
+    pick over the blocks, and the loop one job per pass)."""
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
 
     one = fit_kmeans_native(points, k=4, dim=DIM, seed=7, report_final=True)
@@ -509,10 +548,11 @@ def test_one_block_fit_with_init_matches_multi_block(points, monkeypatch):
 def test_fit_with_init_reads_its_input_once(points, monkeypatch, request, layout):
     """A fit that runs its own init takes the row count and the first
     pick from one aggregate, then makes its picks and its Lloyd passes
-    over one read of the input: one task for one block, else one pack
-    whose first pick job also counts its partitions.  It caches no
-    DataFrame.  Exact Spark jobs, `_arrow_pack` calls and RDD persists
-    at k=4 and 3 passes."""
+    over one read of the input: one task for one block, else one
+    `_features_blocks` layout, persisted once and materialized by the
+    first pick job (a skewed input adds the per-partition count and the
+    cut's map stage).  It caches no DataFrame.  Exact Spark jobs,
+    `_features_blocks` calls and RDD persists at k=4 and 3 passes."""
     from pyspark import RDD
 
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
@@ -523,17 +563,17 @@ def test_fit_with_init_reads_its_input_once(points, monkeypatch, request, layout
         df = points.repartition(8).cache()
         request.addfinalizer(df.unpersist)
     elif layout == "coalesce1":
-        df = points.coalesce(1)  # one partition above one block: re-cut
+        df = points.coalesce(1)  # one partition above one block: cut
     df.count()
     if layout != "one_block":
         monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
 
-    packs, persists = [], []
-    arrow_pack, rdd_persist = K_mod._arrow_pack, RDD.persist
+    layouts, persists = [], []
+    features_blocks, rdd_persist = K_mod._features_blocks, RDD.persist
 
-    def counting_pack(*args):
-        packs.append(1)
-        return arrow_pack(*args)
+    def counting_layout(*args):
+        layouts.append(1)
+        return features_blocks(*args)
 
     def counting_persist(self, *args):
         persists.append(1)
@@ -542,7 +582,7 @@ def test_fit_with_init_reads_its_input_once(points, monkeypatch, request, layout
     def no_cache(*_):
         raise AssertionError("a fit caches no DataFrame")
 
-    monkeypatch.setattr(K_mod, "_arrow_pack", counting_pack)
+    monkeypatch.setattr(K_mod, "_features_blocks", counting_layout)
     monkeypatch.setattr(RDD, "persist", counting_persist)
     # the session's concrete DataFrame class, which overrides both
     monkeypatch.setattr(type(df), "cache", no_cache)
@@ -554,14 +594,33 @@ def test_fit_with_init_reads_its_input_once(points, monkeypatch, request, layout
     res = fit_kmeans_native(df, k=4, dim=DIM, seed=3, tol=0.0, max_iter=3)
     jobs = set(tracker.getJobIdsForGroup()) - before
     assert res.iterations == 3 and len(res.centroids) == 4
-    want = {"one_block": (2, 0, 0), "multi_block": (7, 1, 1), "coalesce1": (8, 1, 2)}
-    assert (len(jobs), len(packs), len(persists)) == want[layout], sorted(jobs)
+    want = {"one_block": (2, 0, 0), "multi_block": (7, 1, 1), "coalesce1": (9, 1, 1)}
+    assert (len(jobs), len(layouts), len(persists)) == want[layout], sorted(jobs)
     assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 def _block_rows(blocks):
     """Row count of every block, in partition order."""
-    return blocks.mapPartitions(lambda it: [sum(X.shape[0] for X in it)]).collect()
+    return blocks.mapPartitions(lambda it: [sum(p[-1].shape[0] for p in it)]).collect()
+
+
+def _read_blocks(*args):
+    """Row counts of the blocks ``_features_blocks(*args)`` lays out,
+    released after the read."""
+    from kmeans_mapreduce_spark.operators.kmeans import _features_blocks
+
+    blocks = _features_blocks(*args)
+    try:
+        return _block_rows(blocks)
+    finally:
+        blocks.unpersist()
+
+
+def _layout(df):
+    """``(total, top)``: the row count of ``df`` and of its largest
+    partition, as `_features_blocks` takes them."""
+    ns = df.rdd.glom().map(len).collect()
+    return sum(ns), max(ns)
 
 
 @pytest.fixture
@@ -579,12 +638,12 @@ def test_skewed_input_is_recut_into_even_blocks(
     points, tmp_path, monkeypatch, small_splits, shape
 ):
     """An input whose rows all sit in one partition, above one block, is
-    re-cut after the pack into contiguous blocks of equal row count:
-    ``points.coalesce(1)``, and a one-row-group file that Spark reads
-    as several splits of which one holds every row.  The blocks must
-    hold the input rows in order, and the fit over them must match the
-    DataFrame loop bitwise (float32-origin fixture: per-cluster float64
-    sums are exact under any grouping)."""
+    cut in the scan's own tasks into contiguous blocks of equal row
+    count: ``points.coalesce(1)``, and a one-row-group file that Spark
+    reads as several splits of which one holds every row.  The blocks
+    must hold the input rows in order, and the fit over them must match
+    the DataFrame loop bitwise (float32-origin fixture: per-cluster
+    float64 sums are exact under any grouping)."""
     import numpy as np
 
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
@@ -600,12 +659,12 @@ def test_skewed_input_is_recut_into_even_blocks(
         assert len(ns) > 1 and sorted(ns)[-2] == 0, ns
     df = df.select("id", "features")
     monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
-    blocks, cache = _features_blocks(df, DIM)
+    blocks = _features_blocks(df.select("features"), DIM, *_layout(df))
     try:
         rows = _block_rows(blocks)
-        stacked = np.vstack(blocks.collect())
+        stacked = np.vstack([p[-1] for p in blocks.collect()])
     finally:
-        cache.unpersist()
+        blocks.unpersist()
     assert len(rows) > 1 and max(rows) - min(rows) <= 1, rows
     expected = np.array([r["features"] for r in df.select("features").collect()])
     assert stacked.tobytes() == expected.tobytes()
@@ -626,9 +685,10 @@ def test_skewed_input_is_recut_into_even_blocks(
 @pytest.mark.parametrize("shape", ["evenly_split", "one_block"])
 def test_unskewed_layout_is_the_coalesced_pack(points, monkeypatch, request, shape):
     """No-change pin: an evenly split input, and one at or below one
-    block, keep the layout of a narrow coalesce of the cached pack to
-    min(partitions, want) blocks, and `_features_blocks` runs exactly
-    one Spark job for them (the pack and its row counts)."""
+    block, keep the layout of a narrow coalesce of the input's
+    partitions to min(partitions, want) blocks.  Building the blocks
+    runs no Spark job; the first read of them is the one job that packs
+    and persists them."""
     from pyspark import StorageLevel
 
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
@@ -645,7 +705,7 @@ def test_unskewed_layout_is_the_coalesced_pack(points, monkeypatch, request, sha
     else:
         df = points
     df = df.select("id", "features")
-    total = points.count()
+    total, top = _layout(df)
     want = max(1, -(-(total * DIM * 8) // K_mod._BLOCK_TARGET_BYTES))
     assert want == (3 if shape == "evenly_split" else 1)
 
@@ -663,15 +723,70 @@ def test_unskewed_layout_is_the_coalesced_pack(points, monkeypatch, request, sha
 
     sc = points.sparkSession.sparkContext
     before = set(sc.statusTracker().getJobIdsForGroup())
-    blocks, cache = _features_blocks(df, DIM)
-    jobs = set(sc.statusTracker().getJobIdsForGroup()) - before
+    blocks = _features_blocks(df.select("features"), DIM, total, top)
+    built = set(sc.statusTracker().getJobIdsForGroup()) - before
     try:
         rows = _block_rows(blocks)
     finally:
-        cache.unpersist()
+        blocks.unpersist()
+    jobs = set(sc.statusTracker().getJobIdsForGroup()) - before
+    assert not built, sorted(built)
     assert len(jobs) == 1, sorted(jobs)
     assert rows == expected
     assert len(rows) == min(parts, want)
+
+
+def test_skewed_fit_persists_once(points, monkeypatch):
+    """A skewed fit from explicit centroids makes ONE RDD persist (its
+    blocks) and no DataFrame cache, and leaves the session's persistent
+    RDDs as it found them.  Its jobs: the aggregate, the per-partition
+    count (one job: a one-partition input needs no exchange), the cut's
+    map stage (AQE runs it when the builder takes the blocks' RDD), then
+    one job per pass, the first of which materializes the blocks."""
+    from pyspark import RDD
+
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+
+    df = points.coalesce(1)
+    init = [list(r["features"]) for r in points.orderBy("id").limit(3).collect()]
+    monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
+    persists, rdd_persist = [], RDD.persist
+
+    def counting_persist(self, *args):
+        persists.append(1)
+        return rdd_persist(self, *args)
+
+    def no_cache(*_):
+        raise AssertionError("a fit caches no DataFrame")
+
+    monkeypatch.setattr(RDD, "persist", counting_persist)
+    monkeypatch.setattr(type(df), "cache", no_cache)
+    monkeypatch.setattr(type(df), "persist", no_cache)
+    sc = points.sparkSession.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    persisted = sc._jsc.getPersistentRDDs().size()
+    res = fit_kmeans_native(df, k=3, dim=DIM, initial_centroids=init, tol=0.0, max_iter=3)
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    assert res.iterations == 3
+    assert len(persists) == 1
+    assert len(jobs) == 1 + 1 + 1 + 3, sorted(jobs)
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_partition_count_mismatch_raises(points, monkeypatch):
+    """A cut task whose partition holds more or fewer rows than the
+    per-partition count its layout was cut from raises
+    `PartitionCountMismatch`."""
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+
+    df = points.coalesce(1).select("features")
+    total, top = _layout(df)
+    monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
+    for counted in (total - 1, total + 1):
+        monkeypatch.setattr(K_mod, "_partition_counts", lambda _: {0: counted})
+        with pytest.raises(Exception, match="PartitionCountMismatch"):
+            _read_blocks(df, DIM, total, top)
 
 
 def test_lloyd_pass_empty_high_partition_rdd(spark):
@@ -692,18 +807,17 @@ def test_lloyd_pass_empty_high_partition_rdd(spark):
 
 
 def test_fit_failure_releases_caches(points, monkeypatch):
-    """A failing fit must not leak the pack or the re-cut blocks:
-    afterwards the session holds exactly the persistent RDDs it held
-    before.  dim=63 against 64-wide features makes every reshape of the
-    packed feature bytes raise.  On the evenly split input the blocks
-    are a view of the pack, so the error surfaces in the first Lloyd
-    pass; on a one-partition input it surfaces inside
-    `_features_blocks`' re-cut job, after both the pack and the re-cut
-    persist exist.  A pick of the fit's own init that raises releases
-    the pack too (multi-block), or runs in the fit's one task with
+    """A failing fit must not leak its blocks: afterwards the session
+    holds exactly the persistent RDDs it held before.  dim=63 against
+    64-wide features makes every reshape of a packed Arrow batch raise,
+    in the first job that packs the input: on the evenly split input
+    the first job that reads the blocks (the first pick, or the first
+    Lloyd pass); on a one-partition input the cut's map stage, which
+    AQE runs when the builder takes the blocks' RDD, before the
+    persist.  A pick of the fit's own init that raises releases the
+    blocks too (multi-block), or runs in the fit's one task with
     nothing to release (one block)."""
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
-    from kmeans_mapreduce_spark.operators.kmeans import _features_blocks
 
     sc = points.sparkSession.sparkContext
     one_block_target = K_mod._BLOCK_TARGET_BYTES
@@ -713,9 +827,9 @@ def test_fit_failure_releases_caches(points, monkeypatch):
     with pytest.raises(Exception):
         fit_kmeans_native(points.repartition(4), k=3, dim=63, seed=1)
     assert sc._jsc.getPersistentRDDs().size() == before
-    one_part = points.coalesce(1)
+    one_part = points.coalesce(1).select("features")
     with pytest.raises(Exception):
-        _features_blocks(one_part.select("features"), 63)
+        _read_blocks(one_part, 63, *_layout(one_part))
     assert sc._jsc.getPersistentRDDs().size() == before
     with pytest.raises(Exception):
         fit_kmeans_native(one_part, k=3, dim=63, seed=1)
@@ -793,9 +907,9 @@ def test_farthest_point_init_matches_dataframe_reference(
 
 @pytest.mark.parametrize("layout", ["one_block", "multi_block"])
 def test_farthest_point_init_job_count(points, monkeypatch, layout):
-    """One block: the pack's materializing job (which also yields the
-    first pick) and one fused job for every other pick.  Multi-block:
-    that job plus one job per pick, k in all."""
+    """One block: the aggregate (which also yields the first pick) and
+    one fused job for every other pick.  Multi-block: the aggregate plus
+    one job per pick over the blocks, k in all."""
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
 
     if layout == "multi_block":
@@ -812,7 +926,7 @@ def test_farthest_point_init_job_count(points, monkeypatch, layout):
 @pytest.mark.parametrize("layout", ["one_block", "multi_block"])
 def test_farthest_point_init_failure_releases_pack(points, monkeypatch, layout):
     """A pick job that raises leaves the session's persistent RDDs as
-    they were: the init pack is released on error."""
+    they were: the init blocks are released on error."""
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
 
     def boom(*_):
@@ -831,8 +945,8 @@ def test_farthest_point_init_failure_releases_pack(points, monkeypatch, layout):
 
 
 def test_farthest_point_init_empty_input(points):
-    """An empty input raises a ValueError naming it, and releases the
-    pack."""
+    """An empty input raises a ValueError naming it, and persists
+    nothing."""
     sc = points.sparkSession.sparkContext
     before = sc._jsc.getPersistentRDDs().size()
     with pytest.raises(ValueError, match="empty"):
@@ -841,7 +955,7 @@ def test_farthest_point_init_empty_input(points):
 
 
 def test_regroup_sorts_pieces_by_global_offset():
-    """A re-cut block is assembled in global row order whatever order the
+    """A cut block is assembled in global row order whatever order the
     shuffle fetched its pieces in."""
     import numpy as np
 
@@ -849,6 +963,6 @@ def test_regroup_sorts_pieces_by_global_offset():
 
     X = np.arange(40.0).reshape(10, 4)
     cuts = [(0, 3), (3, 4), (4, 9), (9, 10)]
-    pieces = [(2, (lo, X[lo:hi].tobytes(), hi - lo)) for lo, hi in cuts]
+    pieces = [(2, lo, X[lo:hi].tobytes(), hi - lo) for lo, hi in cuts]
     out = list(_regroup(reversed(pieces), 4))
-    assert len(out) == 1 and out[0].tobytes() == X.tobytes()
+    assert len(out) == 1 and out[0][-1].tobytes() == X.tobytes()

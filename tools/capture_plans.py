@@ -42,14 +42,18 @@ def _fit_pack_plans(spark, sf_dir: str) -> dict[str, str]:
         points_from_embeddings,
     )
 
-    def _pack_stub(batches):  # plan-shape stand-in for _arrow_pack
+    # plan-shape stand-in for the mapInArrow stage of
+    # operators/kmeans._features_blocks over the features alone
+    def _pack_stub(batches):
         for batch in batches:
             yield batch
+
+    pieces = "j int, g long, b binary, n long"
 
     out = {}
     pts = points_from_embeddings(spark, sf_dir, dim=64, parallelize=False)
     out["kmeans_fit_native_pack"] = explain_str(
-        pts.select("features").mapInArrow(_pack_stub, schema="b binary, n long")
+        pts.select("features").mapInArrow(_pack_stub, schema=pieces)
     )
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").withColumn(
@@ -57,7 +61,7 @@ def _fit_pack_plans(spark, sf_dir: str) -> dict[str, str]:
     )
     zpts = points_from_columns(li, cols, id_col="rid")
     out["kmeans_fit_lineitem_pack"] = explain_str(
-        zpts.select("features").mapInArrow(_pack_stub, schema="b binary, n long")
+        zpts.select("features").mapInArrow(_pack_stub, schema=pieces)
     )
     return out
 
