@@ -63,10 +63,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         pick_dataset,
         read_points_csv,
     )
-    from kmeans_mapreduce_spark.sources.sinks import (
-        cluster_size_report,
-        write_clusters_csv,
-    )
+    from kmeans_mapreduce_spark.sources.sinks import write_clusters_csv
 
     args = _build_parser().parse_args(argv)
     own_session = spark is None
@@ -119,8 +116,10 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             return 2
         dim = args.dim or stats["width"]
 
+        # cluster sizes come from the fit itself; the sink and the plots
+        # label every row (a lazy assignment, run only by them)
         if args.engine == "mllib":
-            _, assigned = fit_kmeans_mllib(
+            model, assigned = fit_kmeans_mllib(
                 pts,
                 k=args.k,
                 seed=args.seed,
@@ -128,6 +127,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 if args.max_iter is not None
                 else ITERATION_THRESHOLD,
             )
+            sizes = model.summary.clusterSizes
             centroids = None
             message = "MLlib KMeans fit complete"
         else:
@@ -140,14 +140,17 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 max_iter=args.max_iter
                 if args.max_iter is not None
                 else ITERATION_THRESHOLD,
+                report_final=True,
             )
+            sizes = res.final_counts
             assigned = assign_clusters_broadcast(pts, res.centroids)
             centroids = res.centroids
             message = res.message()
 
         # the client.go:211-214 size report + master.go:213-227 message
-        for r in cluster_size_report(assigned).collect():
-            print(f"cluster {r['cluster_id']}: {r['size']} points")
+        for cid, size in enumerate(sizes):
+            if size:
+                print(f"cluster {cid}: {size} points")
         print(message)
 
         if args.out:

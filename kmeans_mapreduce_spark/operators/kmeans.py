@@ -32,6 +32,11 @@ worker.go).  The Spark-first re-expression:
                                                 block go to the driver
                                                 (_lloyd_pass), merged in
                                                 partition order
+  one Map + Combine outside a fit               cluster_stats: _block_stats
+    (the streaming update's step)               in each task of one job
+                                                over the input's own
+                                                partitions, merged as
+                                                _lloyd_pass merges them
   Reduce recenter (worker.go:307-319) +         _update_centroids: sum/count
     computeNewCentroids (master.go:579-600)     on the driver; an empty
                                                 cluster keeps its centroid
@@ -202,7 +207,8 @@ def farthest_point_init(
     * otherwise: the input is laid out once as numpy blocks that carry
       the ids (`_features_blocks`) and one job per pick runs over them
       (`_block_picks`; the first materializes them) — k jobs in all,
-      plus a per-partition count on a skewed input.  The blocks are
+      plus a per-partition count on a skewed input whose rows are not
+      all in one partition.  The blocks are
       released on return and on error.
 
     A fit that runs its own init (`fit_kmeans_native` without
@@ -215,15 +221,15 @@ def farthest_point_init(
     first), and ties break to the lowest id, so reruns are bit-identical.
     An empty input raises ``ValueError``.
     """
-    rows, total, top, first = _seeded_first(points, seed, features_col, id_col)
+    rows, total, top, last, first = _seeded_first(points, seed, features_col, id_col)
     if k < 2:
         return [first]
     dim = len(first)
     if _block_count(total, dim) == 1:
         return [first] + _in_one_task(
-            rows, lambda pieces: _init_picks(*_consolidate(pieces, dim), first, k - 1)
+            rows, dim, lambda pieces: _init_picks(*_consolidate(pieces, dim), first, k - 1)
         )
-    blocks = _features_blocks(rows, dim, total, top)
+    blocks = _features_blocks(rows, dim, total, top, last)
     try:
         return _block_picks(blocks, first, k)
     finally:
@@ -231,12 +237,14 @@ def farthest_point_init(
 
 
 def _seeded_first(points: DataFrame, seed: int, features_col="features", id_col="id"):
-    """``(rows, n, top, first)``: the points as ``(id as long,
+    """``(rows, n, top, last, first)``: the points as ``(id as long,
     features)`` rows, their count, the row count of their largest
-    partition (`_largest_partition`) and the seeded first farthest-point
-    pick, from ONE `_aggregate`.  The first pick is the row with the
+    partition and the index of their last non-empty one
+    (`_partition_layout`), and the seeded first farthest-point pick,
+    from ONE `_aggregate`.  The first pick is the row with the
     lowest ``(xxhash64(id, seed), id)``, ties to the earlier row.  An
-    empty input raises ``ValueError``."""
+    empty input, or a null features row as the first pick, raises
+    ``ValueError``."""
     ids, feats = F.col(id_col).cast("long").alias("i"), F.col(features_col).alias("x")
     stats = _aggregate(
         points.select(
@@ -247,13 +255,15 @@ def _seeded_first(points: DataFrame, seed: int, features_col="features", id_col=
             F.monotonically_increasing_id().alias("pos"),
         ),
         n=F.count(F.lit(1)),
-        top=_largest_partition(),
+        **_partition_layout(),
         first=F.min_by("x", F.struct("h", "i", "pos")),
     )
     if not stats["n"]:
         raise ValueError("farthest_point_init: the input points are empty")
+    if stats["first"] is None:
+        raise ValueError("every features row must hold non-null values: the first pick is null")
     first = [float(v) for v in stats["first"]]
-    return points.select(ids, feats), stats["n"], stats["top"], first
+    return points.select(ids, feats), stats["n"], stats["top"], stats["last"], first
 
 
 def _farthest(md, ids) -> int:
@@ -356,47 +366,67 @@ def _aggregate(df: DataFrame, **aggs: Column) -> dict:
     return obs.get
 
 
-def _largest_partition() -> Column:
-    """Aggregate column: the row count of the largest partition, read
-    off a ``pos`` column of ``monotonically_increasing_id()`` (the row's
-    index in its partition is its low 33 bits)."""
-    return F.max(F.col("pos").bitwiseAND(F.lit((1 << 33) - 1))) + 1
+def _partition_layout() -> dict:
+    """Aggregate columns read off a ``pos`` column of
+    ``monotonically_increasing_id()``, whose upper 31 bits are the row's
+    partition index and whose low 33 bits its index in that partition:
+    ``top``, the row count of the largest partition, and ``last``, the
+    index of the last non-empty partition — the partition of every row
+    when ``top`` is the whole count."""
+    pos = F.col("pos")
+    top = F.max(pos.bitwiseAND(F.lit((1 << 33) - 1))) + 1
+    return {"top": top, "last": F.shiftright(F.max(pos), 33)}
 
 
-def _batch_arrays(batch):
+def _batch_arrays(batch, dim: int):
     """One Arrow batch as a tuple of contiguous numpy arrays: the int64
-    values of each leading column, the float64 flattened values of the
-    last (array) column, then the batch's row count."""
+    values of each leading column, the (n x dim) float64 matrix of the
+    last (array) column, then the batch's row count n.  THE place an
+    Arrow batch becomes a feature matrix, so every fit, init, layout
+    and `cluster_stats` shares its check: a features row that is null,
+    holds a null or holds other than ``dim`` values raises
+    ``ValueError`` (flattened, it would shift the rows after it)."""
     import numpy as np
+    import pyarrow.compute as pc
 
     *scalars, col = batch.columns
+    values = col.flatten()
+    if col.null_count or values.null_count or (pc.list_value_length(col).to_numpy() != dim).any():
+        raise ValueError(f"every features row must hold exactly {dim} non-null values")
     ints = [np.ascontiguousarray(s.to_numpy(zero_copy_only=False), dtype=np.int64) for s in scalars]
-    flat = np.ascontiguousarray(col.flatten().to_numpy(zero_copy_only=False), dtype=np.float64)
-    return (*ints, flat, len(col))
+    X = np.ascontiguousarray(values.to_numpy(zero_copy_only=False), dtype=np.float64)
+    return (*ints, X.reshape(len(col), dim), len(col))
 
 
-def _in_one_task(df: DataFrame, fn):
-    """The value ``fn(pieces)`` returns, computed in ONE Python task
-    that reads the Arrow batches of ``df.coalesce(1)`` itself: no pack,
-    no persist, one Spark job.  ``pieces`` are the batches'
-    `_batch_arrays`, in row order; the value comes back pickled in one
-    binary cell."""
+def _per_partition(df: DataFrame, dim: int, fn) -> list:
+    """The values ``fn(pieces)`` returns for each partition of ``df``,
+    in partition order, from ONE Spark job at the input's own
+    parallelism: each Python task reads its partition's Arrow batches
+    itself (no pack, no persist).  ``pieces`` are the batches'
+    `_batch_arrays` of width ``dim``, in row order; each value comes
+    back pickled in one binary cell."""
     import pickle
 
     import pyarrow as pa
 
     def _run(batches):
-        out = fn(_batch_arrays(batch) for batch in batches)
+        out = fn(_batch_arrays(batch, dim) for batch in batches)
         yield pa.RecordBatch.from_pydict({"out": [pickle.dumps(out)]})
 
-    return pickle.loads(df.coalesce(1).mapInArrow(_run, "out binary").collect()[0]["out"])
+    return [pickle.loads(r["out"]) for r in df.mapInArrow(_run, "out binary").collect()]
+
+
+def _in_one_task(df: DataFrame, dim: int, fn):
+    """`_per_partition` of ``df.coalesce(1)``: the value ``fn`` returns
+    over all the rows of ``df``, in ONE Python task."""
+    return _per_partition(df.coalesce(1), dim, fn)[0]
 
 
 def _consolidate(pieces, dim: int):
     """``(*int64s, float64s, n)`` pieces (byte buffers of the block
-    builder, or `_batch_arrays`) -> ``(*int64 arrays, (n x dim) float64
-    matrix)`` of all their rows, in row order; None when they hold no
-    rows.  The one stacker of the init, the fit and the blocks."""
+    builder, or the arrays of `_batch_arrays`) -> ``(*int64 arrays,
+    (n x dim) float64 matrix)`` of all their rows, in row order; None
+    when they hold no rows.  The one stacker of the init, the fit and the blocks."""
     import numpy as np
 
     pieces = [p for p in pieces if p[-1]]
@@ -453,7 +483,7 @@ def _partition_counts(rows: DataFrame) -> dict:
     return {r["p"]: r["n"] for r in counts.collect()}
 
 
-def _features_blocks(rows: DataFrame, dim: int, total: int, top: int):
+def _features_blocks(rows: DataFrame, dim: int, total: int, top: int, last: int):
     """Lay ``rows`` (``features``, or ``(id as long, features)`` when
     the picks need the ids) out as numpy blocks, in one pass from the
     scan: an RDD of at most one `_consolidate` tuple per partition,
@@ -464,7 +494,7 @@ def _features_blocks(rows: DataFrame, dim: int, total: int, top: int):
 
     ``total`` rows want ``want`` blocks of about ``_BLOCK_TARGET_BYTES``
     (`_block_count`).  The input is skewed iff its largest partition
-    (``top`` rows, `_largest_partition`) holds at least twice the fair
+    (``top`` rows, `_partition_layout`) holds at least twice the fair
     share of ``min(want, slots)`` tasks: a one-partition input above one
     block, or a file whose single row group lands every row in one
     split.  One ``mapInArrow`` packs each Arrow batch (`_batch_arrays`)
@@ -475,7 +505,9 @@ def _features_blocks(rows: DataFrame, dim: int, total: int, top: int):
       blocks.
     * Skewed: each batch is cut at the bounds of ``want`` equal blocks
       of global rows (`_cuts`), from every partition's exact row count
-      (`_partition_counts`), and ``repartitionById`` routes each piece
+      (`_partition_counts`; when one partition holds every row,
+      ``top == total``, it is partition ``last`` and no count job
+      runs), and ``repartitionById`` routes each piece
       to its block, where `_regroup` sorts the pieces by offset.  A
       partition whose rows differ from its count raises
       `PartitionCountMismatch`.  Without the cut every Lloyd pass would
@@ -489,9 +521,13 @@ def _features_blocks(rows: DataFrame, dim: int, total: int, top: int):
 
     want = _block_count(total, dim)
     skewed = top >= 2 * total / min(want, rows.sparkSession.sparkContext.defaultParallelism)
+    counts = {}
+    if skewed:
+        # a partition holding every row is the last non-empty one
+        counts = {last: total} if top == total else _partition_counts(rows)
     # partition id -> (global offset of its first row, its row count)
     spans, offset = {}, 0
-    for p, n in sorted(_partition_counts(rows).items()) if skewed else ():
+    for p, n in sorted(counts.items()):
         spans[p], offset = (offset, n), offset + n
     names = [f"c{i}" for i in range(len(rows.columns) - 1)] + ["b"]
     binary = [(c, pa.binary()) for c in names]
@@ -502,8 +538,7 @@ def _features_blocks(rows: DataFrame, dim: int, total: int, top: int):
         start, count = spans.get(i, (0, 0))
         g = start
         for batch in batches:
-            *ints, flat, n = _batch_arrays(batch)
-            arrays = (*ints, flat.reshape(n, dim))
+            *arrays, n = _batch_arrays(batch, dim)
             if skewed and g + n > start + count:
                 raise PartitionCountMismatch(f"partition {i} holds more than the {count} rows counted")
             for j, lo, hi in _cuts(g, n, total, want) if skewed else [(0, 0, n)]:
@@ -758,11 +793,7 @@ def _lloyd_pass(blocks, centroids, want_wssse: bool):
         for part in block:
             yield _block_stats(part[-1], Cl, k, d, want_wssse)
 
-    def merge(p, q):
-        return (p[0] + q[0], p[1] + q[1], p[2] + q[2])
-
     parts = blocks.mapPartitions(step)
-    zero = (np.zeros(k, dtype=np.int64), np.zeros((k, d), dtype=np.float64), 0.0)
     if blocks.getNumPartitions() > 2048:
         # Cluster scale: log-depth partial merge, driver holds O(k*d).
         # treeAggregate, not treeReduce (r15 review fix): treeReduce
@@ -772,14 +803,53 @@ def _lloyd_pass(blocks, centroids, want_wssse: bool):
         # order at this depth is arrival-order (same nondeterminism the
         # old shuffle merge had); the <=2048 branch keeps the driver's
         # partition-ordered fold, so local/bench runs stay bit-stable.
-        out = parts.treeAggregate(zero, merge, merge, depth=2)
+        out = parts.treeAggregate(_merge_in_order((), k, d), _merge_stats, _merge_stats, depth=2)
     else:
-        out = zero
-        for p in parts.collect():  # partition order — deterministic
-            out = merge(out, p)
+        out = _merge_in_order(parts.collect(), k, d)
     if bc is not None:
         bc.unpersist()
     return out
+
+
+def _merge_stats(p, q):
+    """The sum of two `_block_stats` partials: the combine step
+    (worker.go:169-189) of `_lloyd_pass` and `cluster_stats`."""
+    return (p[0] + q[0], p[1] + q[1], p[2] + q[2])
+
+
+def _merge_in_order(partials, k: int, d: int):
+    """``partials`` (`_block_stats`) merged from exact zeros in the
+    order given — partition order, so the merge is deterministic."""
+    import numpy as np
+
+    out = (np.zeros(k, dtype=np.int64), np.zeros((k, d), dtype=np.float64), 0.0)
+    for p in partials:
+        out = _merge_stats(out, p)
+    return out
+
+
+def cluster_stats(points: DataFrame, centroids: Centroids):
+    """``(counts[k], sums[k x d])`` of the ``features`` of ``points``
+    against ``centroids``: per-cluster member counts and coordinate
+    sums, as numpy arrays.  One Lloyd step's statistics (classify and
+    combine, worker.go:288-319) from ONE Spark job at the input's own
+    parallelism, with nothing persisted: each task stacks its
+    partition's Arrow batches into one matrix (`_consolidate`) and runs
+    `_block_stats` on it, and the partials are merged on the driver in
+    partition order (`_merge_in_order`, as `_lloyd_pass` merges them).
+    A one-partition input gives the bits of one pass of the one-block
+    fit."""
+    import numpy as np
+
+    C = np.asarray(centroids, dtype=np.float64)
+    k, d = C.shape
+
+    def stats(pieces):
+        part = _consolidate(pieces, d)
+        return _block_stats(part[-1] if part else None, C, k, d, False)
+
+    counts, sums, _ = _merge_in_order(_per_partition(points.select("features"), d, stats), k, d)
+    return counts, sums
 
 
 def _fit_single_block(X, centroids0, k, dim, tol, max_iter, track_wssse, report_final):
@@ -859,13 +929,13 @@ def fit_kmeans_native(
     """
     init = initial_centroids is None
     if init:
-        rows, total, top, first = _seeded_first(points, seed)
+        rows, total, top, last, first = _seeded_first(points, seed)
         centroids = [first]
     else:
         rows = points.select("features")
         pos = F.monotonically_increasing_id().alias("pos")
-        stats = _aggregate(rows.select(pos), n=F.count(F.lit(1)), top=_largest_partition())
-        total, top = stats["n"], stats["top"]
+        stats = _aggregate(rows.select(pos), n=F.count(F.lit(1)), **_partition_layout())
+        total, top, last = stats["n"], stats["top"], stats["last"]
         centroids = [list(c) for c in initial_centroids]
 
     def fit(X, centroids):
@@ -878,8 +948,8 @@ def fit_kmeans_native(
             picks = _init_picks(*part, centroids[0], k - 1) if init else []
             return fit(part[-1] if part else None, centroids + picks)
 
-        return _in_one_task(rows, picks_and_fit)
-    blocks = _features_blocks(rows, dim, total, top)
+        return _in_one_task(rows, dim, picks_and_fit)
+    blocks = _features_blocks(rows, dim, total, top, last)
     try:
         if init:
             centroids = _block_picks(blocks, centroids[0], k)

@@ -10,12 +10,16 @@ StreamingKMeans, MacQueen-style sequential updates):
     n_j'  = decay * n_j + batch_count_j
     c_j'  = (decay * n_j * c_j + batch_sum_j) / n_j'
 
-With decay=1.0 and a single batch this is EXACTLY one iteration of the
-batch Lloyd loop (pinned in tests/test_streaming_kmeans.py), so the
-operator degrades gracefully to the reference's accumulate-then-fit.
+With decay=1.0 and a single batch this is one iteration of the batch
+Lloyd loop: bit for bit when the batch is one partition, up to the
+order its per-partition sums are added in otherwise (both pinned in
+tests/test_streaming_kmeans.py), so the operator degrades gracefully to
+the reference's accumulate-then-fit.
 
-Scale shape: per batch, one assign + one k x (d+1) aggregation over the
-micro-batch only — state is the k x d centroid matrix plus k counts,
+Scale shape: per batch, ONE Spark job over the micro-batch only
+(`operators.kmeans.cluster_stats`: the fit's `_block_stats` in each of
+the batch's own tasks, k x (d+1) partials per task up, merged in
+partition order) — state is the k x d centroid matrix plus k counts,
 driver-resident, independent of stream length.
 """
 
@@ -24,12 +28,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from kmeans_mapreduce_spark.operators.kmeans import (
-    Centroids,
-    assign_clusters_broadcast,
-)
+from kmeans_mapreduce_spark.operators.kmeans import Centroids, cluster_stats
 
 
 @dataclass
@@ -45,43 +45,22 @@ class StreamingKMeansModel:
         if not self.weights:
             self.weights = [0.0] * len(self.centroids)
 
-    def update(self, batch_df: DataFrame) -> None:
-        """Fold one micro-batch into the model (one weighted Lloyd step).
+    def update(self, batch_df: DataFrame) -> bool:
+        """Fold one micro-batch into the model (one weighted Lloyd step)
+        and return True, or return False for a batch with no rows, which
+        leaves the model as it was: no decay, ``batches_seen`` unchanged.
 
-        Empty clusters keep their previous centroid — the reference's
-        empty-cluster rule (master.go:581-582) carried over."""
-        k = len(self.centroids)
-        dim = len(self.centroids[0])
-        assigned = assign_clusters_broadcast(
-            batch_df.select("id", "features"), self.centroids
-        )
-        if dim <= 16:
-            aggs = [F.count("*").alias("cnt")] + [
-                F.sum(F.col("features")[i]).alias(f"s{i}") for i in range(dim)
-            ]
-            rows = assigned.groupBy("cluster_id").agg(*aggs).collect()
-            stats = {
-                r["cluster_id"]: (r["cnt"], [r[f"s{i}"] for i in range(dim)])
-                for r in rows
-            }
-        else:
-            rows = (
-                assigned.select("cluster_id", F.posexplode("features").alias("pos", "x"))
-                .groupBy("cluster_id", "pos")
-                .agg(F.sum("x").alias("s"), F.count("*").alias("cnt"))
-                .collect()
-            )
-            sums: dict[int, list[float]] = {}
-            cnts: dict[int, int] = {}
-            for r in rows:
-                sums.setdefault(r["cluster_id"], [0.0] * dim)[r["pos"]] = r["s"]
-                cnts[r["cluster_id"]] = r["cnt"]
-            stats = {cid: (cnts[cid], sums[cid]) for cid in sums}
-        for j in range(k):
-            if j not in stats:
+        The batch's per-cluster counts and sums come from ONE Spark job
+        (`cluster_stats`, the fit's own `_block_stats`).  Empty clusters
+        keep their previous centroid — the reference's empty-cluster
+        rule (master.go:581-582) carried over."""
+        counts, sums = cluster_stats(batch_df, self.centroids)
+        if not counts.sum():
+            return False
+        for j, (cnt, s) in enumerate(zip(counts.tolist(), sums.tolist())):
+            if not cnt:
                 self.weights[j] *= self.decay
                 continue
-            cnt, s = stats[j]
             w_old = self.decay * self.weights[j]
             w_new = w_old + cnt
             self.centroids[j] = [
@@ -89,6 +68,7 @@ class StreamingKMeansModel:
             ]
             self.weights[j] = w_new
         self.batches_seen += 1
+        return True
 
 
 def drain_stream_kmeans(
@@ -142,12 +122,9 @@ def drain_stream_kmeans(
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in folded_ids:
             return
-        pts = to_points(batch_df)
-        if pts.isEmpty():
-            return
         with model_lock:
-            model.update(pts)
-            folded_ids.add(batch_id)
+            if model.update(to_points(batch_df)):
+                folded_ids.add(batch_id)
 
     writer = src.writeStream.foreachBatch(fold)
     if checkpoint is not None:

@@ -71,7 +71,9 @@ def test_cli_native_fit_reads_its_cached_input_once(spark, tmp_path, monkeypatch
     builds that cache and returns the row count and the width before the
     fit.  The fit runs its own init: it takes 2 Spark jobs (one
     aggregate, one task), lays out and caches nothing, and leaves the
-    CLI's cache in place."""
+    CLI's cache in place.  The size report comes from the fit's
+    ``final_counts``: without ``--out``/``--plots`` no job runs after
+    the fit, 3 in all."""
     from pyspark import StorageLevel
 
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
@@ -107,3 +109,30 @@ def test_cli_native_fit_reads_its_cached_input_once(spark, tmp_path, monkeypatch
     assert main([csv, "--dim", "3", "--k", "3"], spark=spark) == 0
     # the CLI's jobs before the fit, then the fit's
     assert seen == [1, 2]
+    assert len(set(tracker.getJobIdsForGroup()) - start) == 3
+
+
+def test_cli_mllib_sizes_match_its_assigned_frame(spark, tmp_path, capsys, monkeypatch):
+    """The MLlib run prints its sizes from the model's training summary:
+    the same ``cluster i: n points`` lines as `cluster_size_report` of
+    the frame the fit assigned."""
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+    from kmeans_mapreduce_spark.cli import main
+    from kmeans_mapreduce_spark.sources.sinks import cluster_size_report
+
+    fit, assigned = K_mod.fit_kmeans_mllib, []
+
+    def keeping_fit(*args, **kw):
+        model, frame = fit(*args, **kw)
+        assigned.append(frame)
+        return model, frame
+
+    monkeypatch.setattr(K_mod, "fit_kmeans_mllib", keeping_fit)
+    csv = _write_csv(tmp_path)
+    assert main([csv, "--dim", "3", "--k", "4", "--engine", "mllib"], spark=spark) == 0
+    printed = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("cluster ")]
+    want = [
+        f"cluster {r['cluster_id']}: {r['size']} points"
+        for r in cluster_size_report(assigned[0]).collect()
+    ]
+    assert printed == want and len(want) > 1

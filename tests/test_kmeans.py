@@ -550,9 +550,10 @@ def test_fit_with_init_reads_its_input_once(points, monkeypatch, request, layout
     pick from one aggregate, then makes its picks and its Lloyd passes
     over one read of the input: one task for one block, else one
     `_features_blocks` layout, persisted once and materialized by the
-    first pick job (a skewed input adds the per-partition count and the
-    cut's map stage).  It caches no DataFrame.  Exact Spark jobs,
-    `_features_blocks` calls and RDD persists at k=4 and 3 passes."""
+    first pick job (a skewed input adds the cut's map stage; one whose
+    rows all sit in one partition needs no per-partition count).  It
+    caches no DataFrame.  Exact Spark jobs, `_features_blocks` calls and
+    RDD persists at k=4 and 3 passes."""
     from pyspark import RDD
 
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
@@ -594,7 +595,7 @@ def test_fit_with_init_reads_its_input_once(points, monkeypatch, request, layout
     res = fit_kmeans_native(df, k=4, dim=DIM, seed=3, tol=0.0, max_iter=3)
     jobs = set(tracker.getJobIdsForGroup()) - before
     assert res.iterations == 3 and len(res.centroids) == 4
-    want = {"one_block": (2, 0, 0), "multi_block": (7, 1, 1), "coalesce1": (9, 1, 1)}
+    want = {"one_block": (2, 0, 0), "multi_block": (7, 1, 1), "coalesce1": (8, 1, 1)}
     assert (len(jobs), len(layouts), len(persists)) == want[layout], sorted(jobs)
     assert sc._jsc.getPersistentRDDs().size() == persisted
 
@@ -617,10 +618,11 @@ def _read_blocks(*args):
 
 
 def _layout(df):
-    """``(total, top)``: the row count of ``df`` and of its largest
-    partition, as `_features_blocks` takes them."""
+    """``(total, top, last)``: the row count of ``df``, that of its
+    largest partition and the index of its last non-empty partition, as
+    `_features_blocks` takes them."""
     ns = df.rdd.glom().map(len).collect()
-    return sum(ns), max(ns)
+    return sum(ns), max(ns), max(i for i, n in enumerate(ns) if n)
 
 
 @pytest.fixture
@@ -705,7 +707,7 @@ def test_unskewed_layout_is_the_coalesced_pack(points, monkeypatch, request, sha
     else:
         df = points
     df = df.select("id", "features")
-    total, top = _layout(df)
+    total, top, last = _layout(df)
     want = max(1, -(-(total * DIM * 8) // K_mod._BLOCK_TARGET_BYTES))
     assert want == (3 if shape == "evenly_split" else 1)
 
@@ -723,7 +725,7 @@ def test_unskewed_layout_is_the_coalesced_pack(points, monkeypatch, request, sha
 
     sc = points.sparkSession.sparkContext
     before = set(sc.statusTracker().getJobIdsForGroup())
-    blocks = _features_blocks(df.select("features"), DIM, total, top)
+    blocks = _features_blocks(df.select("features"), DIM, total, top, last)
     built = set(sc.statusTracker().getJobIdsForGroup()) - before
     try:
         rows = _block_rows(blocks)
@@ -739,10 +741,11 @@ def test_unskewed_layout_is_the_coalesced_pack(points, monkeypatch, request, sha
 def test_skewed_fit_persists_once(points, monkeypatch):
     """A skewed fit from explicit centroids makes ONE RDD persist (its
     blocks) and no DataFrame cache, and leaves the session's persistent
-    RDDs as it found them.  Its jobs: the aggregate, the per-partition
-    count (one job: a one-partition input needs no exchange), the cut's
-    map stage (AQE runs it when the builder takes the blocks' RDD), then
-    one job per pass, the first of which materializes the blocks."""
+    RDDs as it found them.  Its jobs: the aggregate (which also names
+    the one partition that holds every row, so no per-partition count
+    runs), the cut's map stage (AQE runs it when the builder takes the
+    blocks' RDD), then one job per pass, the first of which
+    materializes the blocks."""
     from pyspark import RDD
 
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
@@ -770,23 +773,42 @@ def test_skewed_fit_persists_once(points, monkeypatch):
     jobs = set(tracker.getJobIdsForGroup()) - before
     assert res.iterations == 3
     assert len(persists) == 1
-    assert len(jobs) == 1 + 1 + 1 + 3, sorted(jobs)
+    assert len(jobs) == 1 + 1 + 3, sorted(jobs)
     assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_partition_count_mismatch_raises(points, monkeypatch):
     """A cut task whose partition holds more or fewer rows than the
-    per-partition count its layout was cut from raises
-    `PartitionCountMismatch`."""
+    count its layout was cut from raises `PartitionCountMismatch`: on a
+    one-partition input, whose count is the aggregate's total, and on a
+    skewed input with several non-empty partitions, whose counts come
+    from `_partition_counts`."""
     import kmeans_mapreduce_spark.operators.kmeans as K_mod
 
     df = points.coalesce(1).select("features")
-    total, top = _layout(df)
+    total, top, last = _layout(df)
+    assert top == total
     monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", 64 * 1024)
     for counted in (total - 1, total + 1):
-        monkeypatch.setattr(K_mod, "_partition_counts", lambda _: {0: counted})
         with pytest.raises(Exception, match="PartitionCountMismatch"):
-            _read_blocks(df, DIM, total, top)
+            _read_blocks(df, DIM, counted, counted, last)
+
+    # one partition holds 500 rows, four small ones hold the other 10
+    # (a union of two one-partition inputs would be one partition)
+    skewed = points.coalesce(1).union(points.where(F.col("id") < 10)).select("features")
+    total, top, last = _layout(skewed)
+    assert top < total
+    partition_counts, calls = K_mod._partition_counts, []
+    for delta in (-1, 1):
+
+        def miscounted(rows):
+            calls.append(1)
+            return {p: n + delta for p, n in partition_counts(rows).items()}
+
+        monkeypatch.setattr(K_mod, "_partition_counts", miscounted)
+        with pytest.raises(Exception, match="PartitionCountMismatch"):
+            _read_blocks(skewed, DIM, total, top, last)
+    assert len(calls) == 2
 
 
 def test_lloyd_pass_empty_high_partition_rdd(spark):
@@ -966,3 +988,39 @@ def test_regroup_sorts_pieces_by_global_offset():
     pieces = [(2, lo, X[lo:hi].tobytes(), hi - lo) for lo, hi in cuts]
     out = list(_regroup(reversed(pieces), 4))
     assert len(out) == 1 and out[0][-1].tobytes() == X.tobytes()
+
+
+@pytest.mark.parametrize("defect", ["widths", "null_row"])
+def test_malformed_feature_rows_raise(spark, monkeypatch, defect):
+    """A features row that is null, holds a null or holds other than
+    ``dim`` values raises a ValueError naming the width where an Arrow
+    batch becomes a matrix: in the one-block fit, the multi-block fit
+    and the streaming update.  A null row that wins a fit's seeded
+    first pick raises a ValueError too.  Unchecked, a 2-wide and a 4-wide row
+    flatten to the right total and shift the rows between them into
+    the wrong points, and the update's old DataFrame step dropped a
+    null row without a word."""
+    import kmeans_mapreduce_spark.operators.kmeans as K_mod
+    from kmeans_mapreduce_spark.streaming.kmeans_stream import StreamingKMeansModel
+
+    rows = [(i, [float(i), i + 0.5, -float(i)]) for i in range(40)]
+    if defect == "widths":
+        rows[2] = (2, [2.0, 2.5])
+        rows[9] = (9, [9.0, 9.5, -9.0, 1.0])
+    else:
+        rows[5] = (5, None)
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4), "id long, features array<double>"
+    )
+    init = [[0.0, 0.0, 0.0], [30.0, 30.0, -30.0]]
+    for target in (K_mod._BLOCK_TARGET_BYTES, 256):  # one block, then four
+        monkeypatch.setattr(K_mod, "_BLOCK_TARGET_BYTES", target)
+        with pytest.raises(Exception, match="exactly 3 non-null values"):
+            fit_kmeans_native(df, k=2, dim=3, initial_centroids=init)
+    with pytest.raises(Exception, match="exactly 3 non-null values"):
+        StreamingKMeansModel([list(c) for c in init]).update(df)
+    if defect == "null_row":
+        # seed 10 makes the null row (id 5) the seeded first pick, which
+        # the fit's aggregate returns before any Arrow batch is read
+        with pytest.raises(ValueError, match="non-null values: the first pick is null"):
+            fit_kmeans_native(df, k=2, dim=3, seed=10)

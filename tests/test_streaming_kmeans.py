@@ -1,13 +1,17 @@
 """Incremental K-Means: streaming fold must agree with the batch loop.
 
-Two pinned properties:
+Pinned properties:
   * decay=1, one batch == exactly one batch-Lloyd iteration (the
-    streaming operator degrades to the reference's accumulate-then-fit);
+    streaming operator degrades to the reference's accumulate-then-fit),
+    bit for bit on a one-partition batch;
   * multi-batch drain with decay=1 keeps total weight == row count and
-    produces a model whose WSSSE is no worse than the init's.
+    produces a model whose WSSSE is no worse than the init's;
+  * a batch is folded by one Spark job, and an empty one leaves the
+    model untouched.
 """
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,6 +73,75 @@ def test_single_batch_equals_one_lloyd_iteration(spark, sf_dir, points):
     for got, want in zip(model.centroids, batch.centroids):
         assert got == pytest.approx(want, abs=1e-9)
     assert sum(model.weights) == points.count()
+    # one partition: the batch's rows in the order the one-block fit
+    # folds them, so the same bits, narrow and wide
+    for dim in (3, 64):
+        one = points.select("id", F.slice("features", 1, dim).alias("features")).coalesce(1)
+        init = _init(one)
+        model = StreamingKMeansModel([list(c) for c in init], decay=1.0)
+        model.update(one)
+        batch = fit_kmeans_native(one, k=4, dim=dim, initial_centroids=init, max_iter=1)
+        assert model.centroids == batch.centroids, dim
+
+
+def test_update_is_one_job_and_skips_an_empty_batch(spark, points):
+    """`update` runs one Spark job.  A batch with no rows leaves the
+    model as it was: no decay of the weights, ``batches_seen``
+    unchanged."""
+    model = StreamingKMeansModel(_init(points), decay=0.5)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    assert model.update(points)
+    assert len(set(tracker.getJobIdsForGroup()) - before) == 1
+    state = ([list(c) for c in model.centroids], list(model.weights), model.batches_seen)
+    assert not model.update(points.where(F.col("id") < 0))
+    assert (model.centroids, model.weights, model.batches_seen) == state
+
+
+def test_drain_folds_each_batch_in_one_job(spark, sf_dir, tmp_path, monkeypatch):
+    """A drained micro-batch costs one Spark job: the fold runs no
+    emptiness check of its own.  Two files, one micro-batch each, the
+    second emptied by ``to_points``: it takes its one job, finds no
+    rows and leaves the model untouched, so with decay=0.5 the weights
+    still sum to the first batch's rows."""
+    src = tmp_path / "emb_stream4"
+    src.mkdir()
+    for i, name in enumerate(("part-000.parquet", "part-001.parquet")):
+        shutil.copyfile(f"{sf_dir}/embeddings.parquet", src / name)
+        os.utime(src / name, (1_000_000 + i * 100, 1_000_000 + i * 100))
+    pts = points_from_embeddings(spark, sf_dir, dim=64)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    folds = []
+
+    def group_jobs():
+        return set(tracker.getJobIdsForGroup(sc.getLocalProperty("spark.jobGroup.id")))
+
+    def to_points(df):
+        folds.append(group_jobs())
+        return _to_points(df).where(~F.input_file_name().endswith("part-001.parquet"))
+
+    update = StreamingKMeansModel.update
+
+    def counted_update(self, batch_df):
+        folded = update(self, batch_df)
+        folds[-1] = (len(group_jobs() - folds[-1]), folded)
+        return folded
+
+    monkeypatch.setattr(StreamingKMeansModel, "update", counted_update)
+    model = run_streaming_kmeans(
+        spark,
+        str(src),
+        EMB_SCHEMA,
+        to_points,
+        _init(pts),
+        decay=0.5,
+        checkpoint=str(tmp_path / "ckpt4"),
+        max_files_per_trigger=1,
+    )
+    assert folds == [(1, True), (1, False)]
+    assert model.batches_seen == 1
+    assert sum(model.weights) == pts.count()
 
 
 def test_streamed_drain_matches_weight_and_improves(spark, sf_dir, tmp_path):
